@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import event_ts_as_timestamp
+from ..catalog import event_ts_as_timestamp, read_parquet
 from ..operators.snapshot import (
     materialize_history,
     materialize_snapshot,
@@ -451,7 +451,7 @@ def _events_replay_dir(spark: SparkSession, sf_dir: str):
     replay_dir = tempfile.mkdtemp(prefix="events_replay_")
     os.symlink(f"{sf_dir}/events.parquet", f"{replay_dir}/events.parquet")
     # physical ts encoding varies; normalized by event_ts_as_timestamp
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     return replay_dir, schema
 
 

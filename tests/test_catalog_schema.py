@@ -4,12 +4,20 @@ via spark.sql.legacy.parquet.nanosAsLong) and native TIMESTAMP(MICROS)
 (Spark 4 reads TIMESTAMP_NTZ). `catalog.load_table` must normalize both
 to the same logical pair — ts TIMESTAMP (µs, UTC session) + ts_ns BIGINT
 — so every downstream plan and oracle twin is encoding-agnostic.
+
+`catalog.load_table` also caches each file's inferred schema: a repeat
+open of an unchanged file runs no Spark job, and a changed file is
+inferred again.
 """
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from pyspark.sql import types as T
 
@@ -26,12 +34,42 @@ ROWS = {
 TS_US = [1704067200_000000, 1704067200_123456, 1704153599_999999]
 
 
+#: the two physical ts encodings, with the ts_ns each must yield
+ENCODINGS = {
+    "micros": (pa.array(TS_US, type=pa.timestamp("us")), [us * 1000 for us in TS_US]),
+    "nanos": (
+        pa.array([us * 1000 + 7 for us in TS_US], type=pa.timestamp("ns")),
+        [us * 1000 + 7 for us in TS_US],
+    ),
+}
+
+
 def _write_events(dirpath, ts_array):
     table = pa.table({**{k: pa.array(v) for k, v in ROWS.items()}, "ts": ts_array})
     # column order must match the real table
     table = table.select(["event_id", "ts", "user_id", "event_type", "value", "props"])
-    pq.write_table(table, f"{dirpath}/events.parquet")
+    # write-then-rename, the way a producer replaces a file atomically
+    tmp = f"{dirpath}/.events.parquet.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, f"{dirpath}/events.parquet")
     return str(dirpath)
+
+
+def _jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"test_catalog_schema:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ts_ns(df):
+    return [r["ts_ns"] for r in df.orderBy("event_id").collect()]
 
 
 def test_load_table_normalizes_micros_timestamp(spark, tmp_path):
@@ -69,3 +107,61 @@ def test_both_encodings_agree_on_ts_wall_clock(spark, tmp_path):
     ts_us = [r["ts"] for r in load_table(spark, str(d_us), "events").orderBy("event_id").collect()]
     ts_ns = [r["ts"] for r in load_table(spark, str(d_ns), "events").orderBy("event_id").collect()]
     assert ts_us == ts_ns
+
+
+@pytest.mark.parametrize("encoding", sorted(ENCODINGS))
+def test_second_load_runs_no_jobs(spark, tmp_path, encoding):
+    ts, want = ENCODINGS[encoding]
+    d = _write_events(tmp_path, ts)
+    first, jobs = _jobs(spark, lambda: load_table(spark, d, "events"))
+    assert jobs >= 1  # schema inference reads a footer
+    second, jobs = _jobs(spark, lambda: load_table(spark, d, "events"))
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert sorted(map(tuple, second.collect())) == sorted(map(tuple, first.collect()))
+    assert _ts_ns(second) == want
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_path):
+    d = _write_events(tmp_path, ENCODINGS["nanos"][0])
+    assert _ts_ns(load_table(spark, d, "events")) == ENCODINGS["nanos"][1]
+    _write_events(tmp_path, ENCODINGS["micros"][0])
+    df, jobs = _jobs(spark, lambda: load_table(spark, d, "events"))
+    assert jobs >= 1
+    assert _ts_ns(df) == ENCODINGS["micros"][1]
+
+
+def test_directory_table_gaining_a_part_is_reinferred(spark, tmp_path):
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+
+    def add_part(i):
+        pq.write_table(pa.table({"doc_id": [i], "text": [f"doc {i}"]}), f"{table}/part-{i}.parquet")
+
+    add_part(0)
+    load_table(spark, str(tmp_path), "documents")
+    _, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "documents"))
+    assert jobs == 0
+    add_part(1)
+    df, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "documents"))
+    assert jobs >= 1
+    assert sorted(r["doc_id"] for r in df.collect()) == [0, 1]
+
+
+def test_warm_construction_jobs_budget(spark, sf_dir):
+    """Plan construction on a warm schema cache: the schema jobs are
+    gone, and only the eager materialize_once barriers remain."""
+    from gomaxscale_spark.plans import all_queries
+
+    q = all_queries()
+    budget = {
+        "dedup_exact_documents": 0,
+        "dedup_simhash": 0,
+        "text_quality_score": 0,
+        "text_gopher_rules": 0,
+        "dedup_minhash_lsh": 11,
+    }
+    load_table(spark, sf_dir, "documents")
+    for name, most in budget.items():
+        _, jobs = _jobs(spark, lambda: q[name].fn(spark, sf_dir))
+        assert jobs <= most, (name, jobs, most)

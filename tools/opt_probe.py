@@ -7,11 +7,12 @@ measure separately:
 - ``construct_s``: wall of calling ``registry[name].fn(spark, sf_dir)``
   — DataFrame/plan CONSTRUCTION (Py4J traffic + parser calls), a pure
   driver cost the bench cell nevertheless pays;
+- ``construct_jobs``: Spark jobs launched during that construction
+  (eager materialize_once/localCheckpoint barriers show up here);
 - ``first_s``: first noop materialize (codegen compile + execution);
+- ``jobs``: Spark jobs launched by that first materialize;
 - ``best_s`` / ``median_s``: best/median of ``--runs`` further
-  materializes of a freshly constructed frame (steady-state cost);
-- ``jobs``: Spark jobs launched by one materialize (barrier count —
-  eager materialize_once/localCheckpoint calls show up here).
+  materializes of a freshly constructed frame (steady-state cost).
 
 Usage: python tools/opt_probe.py [--sf DIR] [--runs N] [name ...]
 Writes JSON lines to stdout; meant for an IDLE host.
@@ -63,16 +64,20 @@ def main() -> None:
         "overwrite"
     ).save()
 
+    def jobs_in(group: str) -> int:
+        return len(tracker.getJobIdsForGroup(group))
+
     for name in names:
         q = registry[name]
-        sc.setJobDescription(f"opt_probe:{name}")
+        sc.setJobGroup(f"opt_probe:{name}:construct", name)
         t0 = time.perf_counter()
         df = q.fn(spark, sf_dir)
         construct_s = time.perf_counter() - t0
-        jobs_before = len(tracker.getJobIdsForGroup() or [])
+        sc.setJobGroup(f"opt_probe:{name}:first", name)
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         first_s = time.perf_counter() - t0
+        sc.setJobGroup(f"opt_probe:{name}:runs", name)
         walls = []
         for _ in range(runs):
             t0 = time.perf_counter()
@@ -87,14 +92,15 @@ def main() -> None:
                 {
                     "name": name,
                     "construct_s": round(construct_s, 3),
+                    "construct_jobs": jobs_in(f"opt_probe:{name}:construct"),
                     "first_s": round(first_s, 3),
+                    "jobs": jobs_in(f"opt_probe:{name}:first"),
                     "best_s": round(min(walls), 3),
                     "median_s": round(statistics.median(walls), 3),
                 }
             ),
             flush=True,
         )
-        sc.setJobDescription(None)
     spark.stop()
 
 
