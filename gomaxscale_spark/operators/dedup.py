@@ -8,7 +8,8 @@ training-data pipeline needs on top (driver north star).
 
 Scale notes per operator inline. Everything is built-in higher-order
 functions + joins — no Python in any hot path; hashes are Spark's
-xxhash64 (JVM, codegen'd, deterministic across runs/executors).
+xxhash64 (JVM, codegen'd, deterministic across runs/executors), except
+MinHash, whose md5 + Carter-Wegman family the DuckDB oracle replays.
 """
 
 from __future__ import annotations
@@ -193,32 +194,6 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 64, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signatures: sig[i] = min over shingles of xxhash64(h, i)
-    where h is the shingle's token-hash combine (shingle_hash_rows).
-
-    The expensive part — shingling + hashing — happens ONCE per
-    shingle (explode); the 64 derived hash functions re-hash the 8-byte
-    long (cheap, and ANSI-safe — no wrapping multiply). The per-doc
-    mins are 64 agg columns with map-side partial min, so the shuffle
-    carries one row per (partition, doc).
-
-    Scale: explode(docs × shingles) is the dominant row count but it
-    never shuffles raw shingles — only (doc_id, 64 longs) survive the
-    partial agg. The naive alternative (array_min over 64 transform()
-    passes) re-evaluates the string pipeline 64× — measured 450s vs
-    seconds at sf0.1.
-    """
-    hs = shingle_hash_rows(df, id_col, text_col, shingle_n)
-    # F.expr strings, not the Column builder API — see simhash_signatures
-    aggs = [F.expr(f"min(xxhash64(__h, {i})) AS __m{i}") for i in range(num_hashes)]
-    sigs = hs.groupBy(id_col).agg(*aggs)
-    arr = "array(" + ", ".join(f"__m{i}" for i in range(num_hashes)) + ")"
-    return sigs.select(F.col(id_col), F.expr(arr).alias("minhash"))
-
-
 #: Modulus of the portable minhash family — the Mersenne prime 2³¹−1.
 #: (a·h + b) % P with a, h, b < 2³¹ peaks below 2⁶², so the arithmetic
 #: is overflow-free (hence engine-identical) in both Spark's ANSI mode
@@ -301,143 +276,33 @@ def cw_hash_coefficients(n: int, seed: int = 7) -> list[tuple[int, int]]:
     return out
 
 
-#: Shingle-mass chunk bound for the numpy signature kernel: the
-#: (shingles × num_hashes) int64 score block is materialized at most
-#: this many shingle rows at a time (128k × 64 × 8 B = 64 MB/task) —
-#: same bounded-intermediate discipline as vector_kernel.ASSIGN_BLOCK.
-SIG_CHUNK_SHINGLES = 131_072
-
-
-def _portable_minhash_batches(
-    batches, id_name: str, num_hashes: int, shingle_n: int
-):
-    """Per-batch driver of the numpy signature kernel (module-level so
-    tests can exercise it without a SparkSession). Yields pandas
-    frames (id, minhash list[int]); docs with < shingle_n tokens are
-    OMITTED — exactly the SQL pipeline's explode-drops-them
-    semantics."""
-    import hashlib
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    split = re.compile(r"\s+", re.ASCII).split  # Java \s is ASCII-only
-    coeffs = cw_hash_coefficients(num_hashes)
-    Av = np.asarray([a for a, _ in coeffs], dtype=np.int64)[None, :]
-    Bv = np.asarray([b for _, b in coeffs], dtype=np.int64)[None, :]
-    P, R, n = MINHASH_P, MINHASH_R, shingle_n
-    cache: dict[str, int] = {}  # Zipfian vocab → md5 each token once/task
-
-    def tok_hash(t: str) -> int:
-        h = cache.get(t)
-        if h is None:
-            h = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16) % P
-            cache[t] = h
-        return h
-
-    for pdf in batches:
-        ids_out: list = []
-        sh_arrays: list = []
-        lens: list[int] = []
-        for id_val, text in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-            toks = [t for t in split(text or "") if t]
-            if len(toks) < n:
-                continue
-            th = np.fromiter(
-                (tok_hash(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            m = len(th) - n + 1
-            h = th[:m].copy()
-            for i in range(1, n):
-                h = (h * R + th[i : i + m]) % P
-            ids_out.append(id_val)
-            sh_arrays.append(h)
-            lens.append(m)
-        if not ids_out:
-            continue
-        # chunk docs so the (shingles × num_hashes) block stays bounded
-        sigs_out: list = []
-        start = 0
-        while start < len(ids_out):
-            stop, mass = start, 0
-            while stop < len(ids_out) and (mass == 0 or mass + lens[stop] <= SIG_CHUNK_SHINGLES):
-                mass += lens[stop]
-                stop += 1
-            allsh = np.concatenate(sh_arrays[start:stop])
-            S = (allsh[:, None] * Av + Bv) % P
-            bounds = np.zeros(stop - start, dtype=np.int64)
-            np.cumsum(lens[start : stop - 1], out=bounds[1:])
-            mins = np.minimum.reduceat(S, bounds, axis=0)
-            sigs_out.extend(row.tolist() for row in mins)
-            start = stop
-        yield pd.DataFrame({id_name: ids_out, "minhash": sigs_out})
-
-
-def portable_minhash_signatures_numpy(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 64, shingle_n: int = 3
-) -> DataFrame:
-    """Arrow-batched numpy twin of ``portable_minhash_signatures`` —
-    VERDICT r9 item 3: post-kernel, SIGNATURE GENERATION is the
-    measured dominant dedup cost (71 s of the x100 verify-leg A/B).
-    Unlike the cosine swap this twin is **bit-exact by construction**:
-    the family is pure integer math (md5-prefix token hashes mod P,
-    Carter-Wegman folds below 2⁶²), so Python ints/int64 reproduce the
-    SQL emitters' values identically — gated by a collected-row
-    equality test, not a rounding contract.
-
-    Why it can beat the in-JVM SQL pipeline despite Python: (a) each
-    task md5-hashes every DISTINCT token once (Zipfian vocabulary —
-    the SQL path hashes every occurrence); (b) the 64 (a·h+b) % P
-    mins run as three vectorized int64 ops over a shingle block
-    instead of 64 interpreted/codegen'd agg expressions per row;
-    (c) the explode → 64-column partial-agg exchange disappears — the
-    kernel is a pure MAP (one Arrow transfer each way, no shuffle),
-    so downstream banding starts from (id, array) rows directly.
-    Per-task memory is bounded by SIG_CHUNK_SHINGLES (~64 MB block).
-
-    Tokenizer parity: Java's ``\\s`` (Spark ``split``) is ASCII-only,
-    so the kernel splits with ``re.ASCII``; both sides drop empty
-    tokens. Same min-over-multiset (array_distinct in the SQL path
-    only dedups inputs to a MIN — value-irrelevant).
-    """
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [df.schema[id_col], T.StructField("minhash", T.ArrayType(T.LongType()))]
-    )
-
-    def gen(batches):
-        yield from _portable_minhash_batches(batches, id_col, num_hashes, shingle_n)
-
-    return (
-        parallelize_narrow_input(df.select(F.col(id_col), F.col(text_col)))
-        .mapInPandas(gen, out_schema)
-    )
-
-
 def portable_minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 64, shingle_n: int = 3
 ) -> DataFrame:
-    """Engine-portable MinHash signatures: sig[i] = min over shingles of
-    (aᵢ·h + bᵢ) % P, where h is an arithmetic fold of the shingle's
-    TOKEN hashes (each the 60-bit md5 prefix of the token mod P — the
-    PORTABLE_TOKEN_HASH base) and (aᵢ, bᵢ) are fixed-seed literals
-    (cw_hash_coefficients).
+    """MinHash signatures — the one signature family of the LSH dedup
+    layer: sig[i] = min over shingles of (aᵢ·h + bᵢ) % P, where h is an
+    arithmetic fold of the shingle's TOKEN hashes (each the 60-bit md5
+    prefix of the token mod P — the PORTABLE_TOKEN_HASH base) and
+    (aᵢ, bᵢ) are fixed-seed literals (cw_hash_coefficients).
 
     Every step — md5 of UTF-8 text, hex→int, modular arithmetic below
     2⁶² — evaluates bit-identically in Spark and DuckDB, so a SQL oracle
     can REPLAY the signatures and hence the banded candidate set exactly
     (the text analogue of dedup_embedding_lsh's plan-literal planes).
 
-    Like the classic path (shingle_hash_rows), each token is md5'd
-    ONCE and shingles are derived by combining adjacent token hashes —
-    never by building "w1 w2" shingle strings. The string-building
-    variant measured 2.2× slower at sf0.1 on the headline entry
-    (1.9 → 4.1 s, SCALING.md; concat_ws allocation + md5
+    Each token is md5'd ONCE and shingles are derived by combining
+    adjacent token hashes — never by building "w1 w2" shingle strings.
+    The string-building variant measured 2.2× slower at sf0.1 on the
+    headline entry (1.9 → 4.1 s, SCALING.md; concat_ws allocation + md5
     over doubled bytes + string array_distinct); the fold is three
-    integer ops per shingle. Same shuffle shape: explode → 64
-    partial-agg mins, one (doc_id, 64 ints) row per doc survives.
+    integer ops per shingle.
+
+    Scale: explode(docs × shingles) is the dominant row count, but raw
+    shingles never shuffle — the 64 per-doc mins are agg columns with
+    map-side partial min, so one (doc_id, 64 ints) row per (partition,
+    doc) survives. The naive alternative (array_min over 64 transform()
+    passes) re-evaluates the shingle pipeline 64× — measured 450 s vs
+    seconds at sf0.1.
     """
     base = parallelize_narrow_input(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col),
@@ -503,21 +368,20 @@ def _portable_minhash_sigs_from_th(
 
 
 def _band_rows_from_sigs(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int, portable: bool
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """(id, band_id, band_hash) rows from a (id, minhash array) frame.
 
-    Both paths emit 8-byte BIGINT band keys: the classic path
-    compresses each band's rows-per-band signature values with one
-    xxhash64; the portable path uses the two-lane arithmetic fold
-    (band_key_sql) — xxhash64 exists only in Spark, the fold evaluates
-    identically in both engines.
+    Each band's rows-per-band signature values compress into one 8-byte
+    BIGINT key with the two-lane arithmetic fold (band_key_sql), which
+    evaluates identically in Spark and DuckDB.
     """
     rows_per_band = num_hashes // bands
 
     def band_key(b: int) -> str:
-        vals = [f"minhash[{b * rows_per_band + r}]" for r in range(rows_per_band)]
-        return band_key_sql(vals) if portable else f"xxhash64({', '.join(vals)})"
+        return band_key_sql(
+            [f"minhash[{b * rows_per_band + r}]" for r in range(rows_per_band)]
+        )
 
     bands_col = F.expr(
         "array("
@@ -539,25 +403,11 @@ def _lsh_band_rows(
     num_hashes: int,
     bands: int,
     shingle_n: int,
-    portable: bool = False,
-    sig_kernel: str = "sql",
 ) -> DataFrame:
     """(id, band_id, band_hash) rows — one per (doc, band) — the shared
-    base of the bucket table and the hot-bucket review queue.
-    ``sig_kernel="numpy"`` (portable family only) swaps the SQL
-    signature emitters for the bit-exact Arrow-batched kernel
-    (portable_minhash_signatures_numpy)."""
-    if sig_kernel not in ("sql", "numpy"):
-        raise ValueError(f"_lsh_band_rows: unknown sig_kernel {sig_kernel!r}")
-    if portable and sig_kernel == "numpy":
-        sigs = portable_minhash_signatures_numpy(
-            df, id_col, text_col, num_hashes, shingle_n
-        )
-    elif portable:
-        sigs = portable_minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    else:
-        sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    return _band_rows_from_sigs(sigs, id_col, num_hashes, bands, portable)
+    base of the bucket table and the hot-bucket review queue."""
+    sigs = portable_minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    return _band_rows_from_sigs(sigs, id_col, num_hashes, bands)
 
 
 def _lsh_bucket_counts(band_rows: DataFrame) -> DataFrame:
@@ -582,9 +432,7 @@ def _lsh_buckets(
     bands: int,
     shingle_n: int,
     max_bucket_size: int | None = None,
-    portable: bool = False,
     band_rows: DataFrame | None = None,
-    sig_kernel: str = "sql",
 ) -> DataFrame:
     """(band_id, band_hash, ids) bucket table — bounded BEFORE any
     membership array exists.
@@ -606,10 +454,7 @@ def _lsh_buckets(
     """
     if band_rows is None:
         band_rows = materialize_once(
-            _lsh_band_rows(
-                df, id_col, text_col, num_hashes, bands, shingle_n, portable,
-                sig_kernel,
-            )
+            _lsh_band_rows(df, id_col, text_col, num_hashes, bands, shingle_n)
         )
     counts = _lsh_bucket_counts(band_rows)
     if max_bucket_size is not None:
@@ -629,8 +474,6 @@ def lsh_hot_buckets(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    portable: bool = False,
-    sig_kernel: str = "sql",
     band_rows: DataFrame | None = None,
 ) -> DataFrame:
     """The review queue: buckets whose membership exceeds the cap.
@@ -652,9 +495,7 @@ def lsh_hot_buckets(
     ``minhash_lsh_candidates``.
     """
     if band_rows is None:
-        band_rows = _lsh_band_rows(
-            df, id_col, text_col, num_hashes, bands, shingle_n, portable, sig_kernel
-        )
+        band_rows = _lsh_band_rows(df, id_col, text_col, num_hashes, bands, shingle_n)
     return _lsh_bucket_counts(band_rows).filter(F.col("n_members") > max_bucket_size)
 
 
@@ -666,8 +507,6 @@ def drain_hot_buckets(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    portable: bool = False,
-    sig_kernel: str = "sql",
 ) -> DataFrame:
     """DRAIN the review queue: process the hot buckets the capped
     pipeline deferred, without ever expanding them into pairs.
@@ -692,11 +531,11 @@ def drain_hot_buckets(
     Semantics note: full-signature equality is a STRICTER predicate
     than verified Jaccard ≥ t — the drain never drops a doc the
     uncapped pipeline would have kept, it only collapses the
-    near-identical core of each hot family. With ``portable=True`` the
-    signature fold is the two-lane Carter-Wegman arithmetic
-    (band_key_sql over all 64 slots), so a DuckDB oracle replays the
-    families bit-for-bit (fold collisions, ~2⁻⁶², are identical in
-    both engines by construction).
+    near-identical core of each hot family. The signature fold is the
+    two-lane Carter-Wegman arithmetic (full_signature_key_sql over all
+    64 slots), so a DuckDB oracle replays the families bit-for-bit
+    (fold collisions, ~2⁻⁶², are identical in both engines by
+    construction).
 
     Scale: signatures are computed once (materialize_once — band rows
     and the collapse both consume them); hot keys come from the
@@ -705,16 +544,10 @@ def drain_hot_buckets(
     SCALING.md r6); the only shuffles are the count agg, the hot-member
     distinct, and the 8-byte family agg.
     """
-    if portable and sig_kernel == "numpy":
-        _sigs = portable_minhash_signatures_numpy(
-            df, id_col, text_col, num_hashes, shingle_n
-        )
-    elif portable:
-        _sigs = portable_minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    else:
-        _sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    sigs = materialize_once(_sigs)
-    band_rows = _band_rows_from_sigs(sigs, id_col, num_hashes, bands, portable)
+    sigs = materialize_once(
+        portable_minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    )
+    band_rows = _band_rows_from_sigs(sigs, id_col, num_hashes, bands)
     hot_keys = (
         _lsh_bucket_counts(band_rows)
         .filter(F.col("n_members") > max_bucket_size)
@@ -726,7 +559,7 @@ def drain_hot_buckets(
         .distinct()
     )
     families = collapse_signature_families(
-        sigs.join(hot_ids, id_col, "semi"), id_col, num_hashes, portable
+        sigs.join(hot_ids, id_col, "semi"), id_col, num_hashes
     )
     collapsed = F.col("family_size") >= 2
     return families.select(
@@ -738,25 +571,19 @@ def drain_hot_buckets(
 
 
 def collapse_signature_families(
-    sigs: DataFrame, id_col: str, num_hashes: int = 64, portable: bool = False
+    sigs: DataFrame, id_col: str, num_hashes: int = 64
 ) -> DataFrame:
     """Family collapse over a ``(id, minhash array)`` frame: one row per
     input doc — (id, keep_id = family min id, family_size) — keyed by
-    the full-signature fold (depth-bounded two-level Carter-Wegman when
-    ``portable``, one xxhash64 otherwise). The aggregation half of
-    ``drain_hot_buckets``, exposed for callers that already know WHICH
-    docs are hot (the streaming dedup lake's review queue)."""
-    if portable:
-        # depth-bounded two-level fold, identical in the DuckDB oracle
-        level1, final = full_signature_key_sql("minhash[{i}]", num_hashes)
-        keyed = sigs.select(
-            F.col(id_col), *[F.expr(sql).alias(a) for a, sql in level1]
-        ).select(F.col(id_col), F.expr(final).alias("__sig_key"))
-    else:
-        vals = ", ".join(f"minhash[{i}]" for i in range(num_hashes))
-        keyed = sigs.select(
-            F.col(id_col), F.expr(f"xxhash64({vals})").alias("__sig_key")
-        )
+    the depth-bounded two-level Carter-Wegman fold of the full
+    signature (full_signature_key_sql), identical in the DuckDB oracle.
+    The aggregation half of ``drain_hot_buckets``, exposed for callers
+    that already know WHICH docs are hot (the streaming dedup lake's
+    review queue)."""
+    level1, final = full_signature_key_sql("minhash[{i}]", num_hashes)
+    keyed = sigs.select(
+        F.col(id_col), *[F.expr(sql).alias(a) for a, sql in level1]
+    ).select(F.col(id_col), F.expr(final).alias("__sig_key"))
     fam = keyed.groupBy("__sig_key").agg(
         F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("family_size")
     )
@@ -771,20 +598,16 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    portable: bool = False,
     band_rows: DataFrame | None = None,
-    sig_kernel: str = "sql",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
 
     bands=16 × rows=4 over 64 hashes → collision prob ≈ 1-(1-j⁴)¹⁶
     (j = true Jaccard): ~0.98 at j=0.7, ~0.04 at j=0.3.
 
-    ``portable=True`` swaps the xxhash64 signature family for the
-    md5 + Carter-Wegman one (portable_minhash_signatures): ~1.3× the
-    hash cost (md5 per token instead of xxhash64), but a DuckDB oracle
-    can replay the candidate set bit-for-bit — the oracle-gated catalog
-    entries use it so parity is deterministic on any corpus,
+    Signatures are the md5 + Carter-Wegman family
+    (portable_minhash_signatures), so a DuckDB oracle can replay the
+    candidate set bit-for-bit — parity is deterministic on any corpus,
     independent of banding recall.
 
     Scale: explode each doc into `bands` (band_id, band_hash) keys →
@@ -809,7 +632,7 @@ def minhash_lsh_candidates(
     # a re-run of the whole signature pipeline.
     buckets = _lsh_buckets(
         df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket_size,
-        portable, band_rows, sig_kernel,
+        band_rows,
     )
     combos = F.flatten(
         F.transform(
@@ -1221,7 +1044,7 @@ def minhash_verified_pairs(
         tokd, id_col, "__th60", num_hashes, shingle_n
     )
     band_rows = materialize_once(
-        _band_rows_from_sigs(sigs, id_col, num_hashes, bands, portable=True)
+        _band_rows_from_sigs(sigs, id_col, num_hashes, bands)
     )
     cands = minhash_lsh_candidates(
         df,
@@ -1231,7 +1054,6 @@ def minhash_verified_pairs(
         bands=bands,
         shingle_n=shingle_n,
         max_bucket_size=max_bucket_size,
-        portable=True,
         band_rows=band_rows,
     )
     return verify_candidates_jaccard_from_tokens(
@@ -1494,7 +1316,7 @@ def simhash_signatures(
     hash) is a cheap long expression, aggregated as `bits` partial-agg
     sum columns; the signature recombines the sign bits. Same
     single-string-hash + explode/partial-agg shape as
-    minhash_signatures — one shuffle of (doc_id, `bits` longs), token
+    portable_minhash_signatures — one shuffle of (doc_id, `bits` longs), token
     strings never move.
     """
     toks = parallelize_narrow_input(df.select(F.col(id_col), F.col(text_col))).select(

@@ -320,7 +320,6 @@ def lsh_near_duplicates_adaptive(
     target_bucket: int = 64,
     wide_sigs: DataFrame | None = None,
     kernel: str = "hof",
-    sig_kernel: str = "hof",
 ) -> DataFrame:
     """``lsh_near_duplicates`` with an ADAPTIVE signature width — the
     fix for the fixed-2⁸-bucket blocker the 30× replica study exposed
@@ -359,15 +358,15 @@ def lsh_near_duplicates_adaptive(
     Arrow-batched numpy kernel (vector_kernel.cosine_pairs) — same
     raw-threshold predicate, same 6dp projection.
 
-    ``sig_kernel="numpy"`` (r12) swaps the SIGNATURE stage — the
-    compositions' measured wall (SCALING.md r9 named it; r12 measured
-    the HOF folds at 21.98 s x30 / 67.94 s x100 vs 0.68 / 0.93 s for
-    the Arrow matmul+pack kernel, packed values IDENTICAL at every
-    scale tried). Sign parity is empirical-but-exact-so-far: a flip
-    needs |dot| inside last-ulp noise; gated by collected-signature
-    equality tests and the oracle replay at both SFs.
+    The SIGNATURE stage is the Arrow matmul+pack kernel
+    (vector_kernel.sign_band_signatures, via ``wide_band_signatures``):
+    SCALING.md r12 timed the interpreted per-plane folds at 21.98 s
+    x30 / 67.94 s x100 against 0.68 / 0.93 s for the kernel, packed
+    values IDENTICAL at every scale tried. Sign parity is empirical-but-exact-so-far: a flip
+    needs |dot| inside last-ulp noise; gated by a collected-signature
+    equality test against ``lsh_signature_sql`` and the oracle replay
+    at both SFs.
     """
-    all_planes = hyperplanes(dim, n_bands * planes_per_band, seed)
     # materialize the (vid, vec, nrm) frame once (r17 optimization
     # round, guide §2.4): the signature stage and BOTH verify sides
     # consumed it with different projections, so the embeddings scan +
@@ -396,28 +395,9 @@ def lsh_near_duplicates_adaptive(
         sig_src = wide_sigs.select(
             F.col(id_col).alias("vid"), *[f"s{b}" for b in range(n_bands)]
         )
-    elif sig_kernel == "numpy":
-        # r12: the signature stage was the compositions' measured wall
-        # (21.98 s at x30 / 67.94 s at x100 for the HOF per-plane
-        # folds); the Arrow matmul+pack kernel reads 0.68 / 0.93 s with
-        # packed values IDENTICAL at every scale tried (SCALING.md r12)
-        from . import vector_kernel as VK
-
-        sigk = VK.sign_band_signatures(all_planes, planes_per_band, n_bands)
-        sig_src = with_norm.select("vid", sigk(F.col("vec")).alias("__s")).select(
-            "vid", *[F.col(f"__s.s{b}").alias(f"s{b}") for b in range(n_bands)]
-        )
-    elif sig_kernel == "hof":
-        band_sigs = [
-            F.expr(
-                lsh_signature_sql("vec", all_planes[b * planes_per_band : (b + 1) * planes_per_band])
-            ).alias(f"s{b}")
-            for b in range(n_bands)
-        ]
-        sig_src = with_norm.select("vid", *band_sigs)
     else:
-        raise ValueError(
-            f"lsh_near_duplicates_adaptive: unknown sig_kernel {sig_kernel!r}"
+        sig_src = wide_band_signatures(
+            with_norm, dim, "vid", "vec", planes_per_band, n_bands, seed
         )
     sigs = (
         sig_src
@@ -509,7 +489,6 @@ def wide_band_signatures(
     planes_per_band: int = 16,
     n_bands: int = 4,
     seed: int = 42,
-    kernel: str = "hof",
 ) -> DataFrame:
     """(id, s0..s{n_bands-1}): each vector's FULL per-band sign
     signatures, one column per band — the single signature-pipeline
@@ -518,35 +497,23 @@ def wide_band_signatures(
     ``wide_sigs`` hook) derive from. Same plane family/order
     everywhere.
 
-    ``kernel="numpy"``: one Arrow-batched matmul+pack instead of the
-    interpreted per-plane zip_with/aggregate folds — measured
-    packed-value-IDENTICAL at sf0.1/x30/x100 and 32-73× faster at
+    One Arrow-batched matmul+pack (vector_kernel.sign_band_signatures)
+    — measured packed-value-IDENTICAL to the per-plane
+    ``lsh_signature_sql`` folds at sf0.1/x30/x100 and 32-73× faster at
     replica scale (SCALING.md r12; sign flips would need |dot| inside
     last-ulp noise). A signature STORE must be read and written under
     ONE kernel — mixing kernels across epochs is the same contract
     violation as mixing plane seeds."""
-    all_planes = hyperplanes(dim, n_bands * planes_per_band, seed)
-    if kernel == "numpy":
-        from . import vector_kernel as VK
+    from . import vector_kernel as VK
 
-        sigk = VK.sign_band_signatures(all_planes, planes_per_band, n_bands)
-        return embeddings.select(
-            F.col(id_col), sigk(F.col(vec_col)).alias("__s")
-        ).select(
-            F.col(id_col),
-            *[F.col(f"__s.s{b}").alias(f"s{b}") for b in range(n_bands)],
-        )
-    if kernel != "hof":
-        raise ValueError(f"wide_band_signatures: unknown kernel {kernel!r}")
-    sigs = [
-        F.expr(
-            lsh_signature_sql(
-                vec_col, all_planes[b * planes_per_band : (b + 1) * planes_per_band]
-            )
-        ).alias(f"s{b}")
-        for b in range(n_bands)
-    ]
-    return embeddings.select(F.col(id_col), *sigs)
+    all_planes = hyperplanes(dim, n_bands * planes_per_band, seed)
+    sigk = VK.sign_band_signatures(all_planes, planes_per_band, n_bands)
+    return embeddings.select(
+        F.col(id_col), sigk(F.col(vec_col)).alias("__s")
+    ).select(
+        F.col(id_col),
+        *[F.col(f"__s.s{b}").alias(f"s{b}") for b in range(n_bands)],
+    )
 
 
 def band_signature_rows(
@@ -703,7 +670,6 @@ def lsh_bucket_topk_adaptive(
     seed: int = 42,
     target_bucket: int = 128,
     min_bits: int = 4,
-    sig_kernel: str = "hof",
 ) -> DataFrame:
     """``lsh_bucket_topk`` with an ADAPTIVE probe width — the serving
     twin of the fix that unblocked the dedup side at 30× (SCALING.md
@@ -735,25 +701,14 @@ def lsh_bucket_topk_adaptive(
     # measured, not applied: parallelize_narrow_input before this scan
     # was ~30% SLOWER at the x30 replica (9.2 → 11.9 s) — the 16-dot
     # signature map is too cheap to pay a 60k-vector-row shuffle for,
-    # unlike the IVF assignment fan-out below (SCALING.md r8)
-    if sig_kernel == "numpy":
-        # r12: same Arrow matmul+pack kernel as the dedup side (packed
-        # values identical at every scale tried, SCALING.md r12) — one
-        # 16-bit band
-        from . import vector_kernel as VK
+    # unlike the IVF assignment fan-out below (SCALING.md r8).
+    # Signatures: the same Arrow matmul+pack kernel as the dedup side
+    # (packed values identical to the sign fold, SCALING.md r12) — one
+    # 16-bit band
+    from . import vector_kernel as VK
 
-        sigk = VK.sign_band_signatures(planes, max_planes, 1)
-        with_sig = embeddings.withColumn(
-            "__sig", sigk(F.col(vec_col))["s0"]
-        )
-    elif sig_kernel == "hof":
-        with_sig = embeddings.withColumn(
-            "__sig", lsh_signature(F.col(vec_col), planes)
-        )
-    else:
-        raise ValueError(
-            f"lsh_bucket_topk_adaptive: unknown sig_kernel {sig_kernel!r}"
-        )
+    sigk = VK.sign_band_signatures(planes, max_planes, 1)
+    with_sig = embeddings.withColumn("__sig", sigk(F.col(vec_col))["s0"])
     bucketed = (
         with_sig
         .crossJoin(F.broadcast(nn))

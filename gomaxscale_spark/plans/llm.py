@@ -442,12 +442,12 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             D.portable_minhash_signatures_from_hashes(
                 tokd, "doc_id", "__th60", num_hashes=64, shingle_n=2
             ),
-            "doc_id", 64, 16, portable=True,
+            "doc_id", 64, 16,
         )
     )
     cands = D.minhash_lsh_candidates(
         d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2,
-        max_bucket_size=cap, portable=True, band_rows=band_rows,
+        max_bucket_size=cap, band_rows=band_rows,
     )
     pairs = D.verify_candidates_jaccard_from_tokens(
         tokd, cands, "doc_id", "__toks", threshold=0.8, shingle_n=2
@@ -462,7 +462,7 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hot = D.lsh_hot_buckets(
         d, "doc_id", "text", max_bucket_size=cap, num_hashes=64, bands=16,
-        shingle_n=2, portable=True, band_rows=band_rows,
+        shingle_n=2, band_rows=band_rows,
     ).select(
         F.lit("hot_bucket").alias("kind"),
         F.lit(None).cast("long").alias("id_a"),
@@ -536,7 +536,7 @@ def dedup_minhash_lsh_hot_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     return D.drain_hot_buckets(
         d, "doc_id", "text", max_bucket_size=2, num_hashes=64, bands=16,
-        shingle_n=2, portable=True,
+        shingle_n=2,
     )
 
 
@@ -785,15 +785,13 @@ def _embedding_lsh_adaptive_oracle(threshold: float) -> str:
     "replays count → width → mask → verify from the same plane "
     "literals. Measured 37 s at the 30× replica the fixed-width twin "
     "could not finish in 15 minutes (SCALING.md r5); r12 moved the "
-    "signature stage to the Arrow matmul+pack kernel "
-    "(sig_kernel='numpy', packed values identical at every scale "
-    "tried) — 15.8 s at 30×, 16.2 s at 100× (SCALING.md r12).",
+    "signature stage to the Arrow matmul+pack kernel (packed values "
+    "identical to the SQL sign fold at every scale tried) — 15.8 s at "
+    "30×, 16.2 s at 100× (SCALING.md r12).",
 )
 def dedup_embedding_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    return S.lsh_near_duplicates_adaptive(
-        e, threshold=0.3, dim=64, sig_kernel="numpy"
-    )
+    return S.lsh_near_duplicates_adaptive(e, threshold=0.3, dim=64)
 
 
 @query(
@@ -826,9 +824,7 @@ def dedup_embedding_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embedding_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    pairs = S.lsh_near_duplicates_adaptive(
-        e, threshold=0.3, dim=64, sig_kernel="numpy"
-    )
+    pairs = S.lsh_near_duplicates_adaptive(e, threshold=0.3, dim=64)
     return D.connected_components_star(pairs).select(
         F.col("id").alias("vec_id"), "cluster_id"
     )
@@ -863,9 +859,7 @@ def dedup_embedding_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embedding_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    pairs = S.lsh_near_duplicates_adaptive(
-        e, threshold=0.3, dim=64, sig_kernel="numpy"
-    )
+    pairs = S.lsh_near_duplicates_adaptive(e, threshold=0.3, dim=64)
     clusters = D.connected_components_star(pairs)
     drop = clusters.filter(F.col("cluster_id") != F.col("id")).select("id")
     return (
@@ -996,12 +990,7 @@ def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_lsh_bucketed_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    # sig_kernel="numpy" (r12): the corpus signature map rides the
-    # Arrow matmul+pack kernel — packed values identical to the HOF
-    # fold at every scale tried (SCALING.md r12), oracle re-run green
-    return S.lsh_bucket_topk_adaptive(
-        e, _query_vector(spark, sf_dir), k=10, sig_kernel="numpy"
-    )
+    return S.lsh_bucket_topk_adaptive(e, _query_vector(spark, sf_dir), k=10)
 
 
 # -------------------------------------------------------------- B17 text
@@ -3899,9 +3888,9 @@ def _contamination_base(
     sigs = D.portable_minhash_signatures_from_hashes(
         tokd, "doc_id", "th60", num_hashes=64, shingle_n=2
     )
-    band_rows = D._band_rows_from_sigs(sigs, "doc_id", 64, 16, portable=True)
+    band_rows = D._band_rows_from_sigs(sigs, "doc_id", 64, 16)
     cands = D.minhash_lsh_candidates(
-        d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2, portable=True,
+        d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2,
         band_rows=materialize_once(band_rows),
     )
     pairs = D.verify_candidates_jaccard_from_tokens(

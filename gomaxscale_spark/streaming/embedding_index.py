@@ -83,7 +83,6 @@ class IncrementalEmbeddingIndexSink:
         target_bucket: int = 64,
         max_bucket_size: int | None = None,
         kernel: str = "numpy",
-        sig_kernel: str = "numpy",
         compact_every: int | None = None,
     ) -> None:
         self.path = path
@@ -105,27 +104,6 @@ class IncrementalEmbeddingIndexSink:
         if kernel not in ("numpy", "hof"):
             raise ValueError(f"IncrementalEmbeddingIndexSink: unknown kernel {kernel!r}")
         self.kernel = kernel
-        #: SIGNATURE kernel (r12): "numpy" (default since r13 — Arrow
-        #: matmul+pack, sign_band_signatures — 32-73× faster at replica
-        #: scale with packed values measured IDENTICAL, SCALING.md r12;
-        #: a full stamped round of parity evidence made it the
-        #: conservative choice, VERDICT r12 item 3) or "hof" (the
-        #: portable per-plane SQL folds — what every pre-r13 lake was
-        #: written with, and what a pre-stamp lake requires). Unlike
-        #: the verify kernel, signatures are PERSISTED STATE: stored
-        #: band sigs and probe-time query sigs must come from ONE
-        #: kernel or a divergence (however unlikely) would silently
-        #: mis-bucket. The choice is therefore STAMPED into the lake
-        #: (sig_kernel.json) on first ingest and enforced loudly on
-        #: every ingest/probe; a pre-stamp lake with existing state
-        #: counts as "hof" (what it was written with) — opening one
-        #: under the r13 default therefore fails loudly, by design:
-        #: re-open legacy lakes with sig_kernel="hof" explicitly.
-        if sig_kernel not in ("numpy", "hof"):
-            raise ValueError(
-                f"IncrementalEmbeddingIndexSink: unknown sig_kernel {sig_kernel!r}"
-            )
-        self.sig_kernel = sig_kernel
         #: 100 TB control loop (the text lake's cap, transplanted): the
         #: adaptive mask keeps EXPECTED bucket occupancy ~target_bucket,
         #: but a pathological sign region (near-zero vectors, constant
@@ -169,40 +147,43 @@ class IncrementalEmbeddingIndexSink:
         return f"{self.path}/sig_kernel.json"
 
     def _enforce_sig_kernel(self, write: bool) -> None:
-        """One signature kernel per lake, forever. The stamp is written
-        atomically (tmp + rename) on the first ingest; probes only
-        check. A lake with existing state but no stamp pre-dates r12
-        and was written by the 'hof' default — only 'hof' may touch
-        it (re-stamped on its next ingest)."""
+        """One signature kernel per lake, forever. Band signatures are
+        PERSISTED STATE: stored band sigs and probe-time query sigs
+        must come from one kernel, or a divergence (however unlikely)
+        would silently mis-bucket. Every lake is therefore stamped
+        ``{"sig_kernel": "numpy"}`` (the Arrow matmul+pack kernel,
+        sign_band_signatures) on first ingest, atomically (tmp +
+        rename); probes only check. A lake stamped with anything else,
+        or holding ``kept/`` state with no stamp (a pre-stamp lake,
+        written by the retired interpreted sign folds), is refused —
+        it needs a fresh lake or a full re-ingest."""
         import json as _json
 
         p = self._sig_stamp_path()
         if os.path.exists(p):
             with open(p) as f:
                 stamped = _json.load(f)["sig_kernel"]
-            if stamped != self.sig_kernel:
+            if stamped != "numpy":
                 raise ValueError(
                     f"embedding lake at {self.path} is stamped "
-                    f"sig_kernel={stamped!r} but this sink was built with "
-                    f"{self.sig_kernel!r} — stored band signatures and "
+                    f"sig_kernel={stamped!r}; this sink writes and probes "
+                    "'numpy' signatures — stored band signatures and "
                     "probe-time query signatures must come from ONE kernel "
                     "(mixing is the same contract violation as mixing "
                     "plane seeds)"
                 )
             return
         if os.path.isdir(f"{self.path}/kept"):
-            if self.sig_kernel != "hof":
-                raise ValueError(
-                    f"embedding lake at {self.path} holds pre-stamp state "
-                    "(written by the 'hof' default) — open it with "
-                    "sig_kernel='hof'; a kernel switch needs a fresh lake "
-                    "(or a full re-ingest)"
-                )
+            raise ValueError(
+                f"embedding lake at {self.path} holds pre-stamp state "
+                "(written by the retired 'hof' signature folds) — a kernel "
+                "switch needs a fresh lake (or a full re-ingest)"
+            )
         if write:
             os.makedirs(self.path, exist_ok=True)
             tmp = f"{p}.tmp"
             with open(tmp, "w") as f:
-                _json.dump({"sig_kernel": self.sig_kernel}, f)
+                _json.dump({"sig_kernel": "numpy"}, f)
             os.replace(tmp, p)
 
     def _read_or_none(self, spark, sub: str) -> DataFrame | None:
@@ -287,8 +268,7 @@ class IncrementalEmbeddingIndexSink:
         # per-batch cost in r7)
         wide_sigs = materialize_once(
             S.wide_band_signatures(
-                batch, self.dim, id_c, vec, self.planes_per_band, self.n_bands,
-                kernel=self.sig_kernel,
+                batch, self.dim, id_c, vec, self.planes_per_band, self.n_bands
             )
         )
         batch_bands = S.band_signature_rows(
@@ -464,8 +444,8 @@ class IncrementalEmbeddingIndexSink:
         from ..operators import similarity as S
 
         # the driver-side query fold is kernel-agnostic (same bits as
-        # both kernels, equality pytested) — the check here catches a
-        # sink built under the WRONG sig_kernel before it ever ingests
+        # the kernel, equality pytested) — the check here refuses a lake
+        # stamped by another kernel before any probe
         self._enforce_sig_kernel(write=False)
         id_c, vec = self.id_col, self.vec_col
         all_planes = S.hyperplanes(
@@ -598,7 +578,6 @@ class IncrementalEmbeddingIndexSink:
             vec_col=query_vec_col,
             planes_per_band=self.planes_per_band,
             n_bands=self.n_bands,
-            kernel=self.sig_kernel,
         )
         qrows = wide.select(
             F.col(query_id_col),

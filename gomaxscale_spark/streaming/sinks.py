@@ -611,8 +611,8 @@ class IncrementalLSHDedupSink:
         empty lake → empty frame).
 
         Same pipeline as the trigger's cross-batch layer, pointed the
-        other way: the probe docs' band rows (portable family, same
-        hash literals as the index) BROADCAST against the lake band
+        other way: the probe docs' band rows (same hash literals as
+        the index) BROADCAST against the lake band
         index — the lake is scanned, never shuffled — then exact
         Jaccard verifies the candidates, so an identical doc reports
         jaccard 1.0 (identical text ⇒ identical band rows ⇒ always a
@@ -650,8 +650,7 @@ class IncrementalLSHDedupSink:
             id_c, "band_id", "band_hash"
         )
         probe_bands = D._lsh_band_rows(
-            probe_docs, id_c, txt, self.num_hashes, self.bands, self.shingle_n,
-            portable=True,
+            probe_docs, id_c, txt, self.num_hashes, self.bands, self.shingle_n
         )
         cross = self.cross_batch_candidates(lake_bands, probe_bands)
         docs = kept.select(id_c, txt).unionByName(probe_docs.select(id_c, txt))
@@ -714,8 +713,7 @@ class IncrementalLSHDedupSink:
         # kept/bands outputs — SCALING.md r7)
         band_rows_all = materialize_once(
             D._lsh_band_rows(
-                batch, id_c, txt, self.num_hashes, self.bands, self.shingle_n,
-                portable=True,
+                batch, id_c, txt, self.num_hashes, self.bands, self.shingle_n
             )
         )
         # every materialize_once frame this batch creates is freed in
@@ -779,7 +777,7 @@ class IncrementalLSHDedupSink:
         cands = materialize_once(
             D.minhash_lsh_candidates(
                 batch, id_c, txt, self.num_hashes, self.bands, self.shingle_n,
-                max_bucket_size=self.max_bucket_size, portable=True,
+                max_bucket_size=self.max_bucket_size,
                 band_rows=rows_for(batch),
             )
         )
@@ -955,7 +953,7 @@ class IncrementalLSHDedupSink:
         sigs = D.portable_minhash_signatures(
             hot_docs, id_c, txt, self.num_hashes, self.shingle_n
         )
-        fams = D.collapse_signature_families(sigs, id_c, self.num_hashes, portable=True)
+        fams = D.collapse_signature_families(sigs, id_c, self.num_hashes)
 
         # materialize BEFORE the swaps: the drop/orphan lists' lineage
         # reads the old kept/ and bands/ files, which the publishes

@@ -114,16 +114,16 @@ def test_minhash_lsh_recall_vs_bruteforce(spark, near_dup_corpus):
 
 def test_portable_minhash_lsh_recall_vs_bruteforce(spark, near_dup_corpus):
     """The portable (md5 + Carter-Wegman) family drives the oracle-gated
-    catalog entries; its banding recall must match the xxhash64 path —
-    the brute-force-equality claim the window entries' docstrings defer
-    to this check."""
+    catalog entries; its banding recall at the 0.8 threshold is the
+    brute-force-equality claim the window entries' docstrings defer to
+    this check."""
     exact = brute_force_pairs(spark, near_dup_corpus, threshold=0.8, shingle_n=2)
     assert exact, "fixture should contain true near-duplicates"
     candidates = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_candidates(
             near_dup_corpus, "doc_id", "text", num_hashes=64, bands=16,
-            shingle_n=2, portable=True,
+            shingle_n=2,
         ).collect()
     }
     missed = exact - candidates
@@ -197,8 +197,7 @@ def test_drain_hot_buckets_collapses_boilerplate(spark):
     family (keep_id = min id), tail-variant odds may only collapse
     with equal signatures (never into the even family), and every
     hot-bucket member appears exactly once in the output — nothing is
-    silently dropped. Both signature families (portable + xxhash64)
-    honor the same contract."""
+    silently dropped."""
     from gomaxscale_spark.operators.dedup import drain_hot_buckets
 
     base = "common boilerplate text repeated across the corpus for every single document"
@@ -206,24 +205,23 @@ def test_drain_hot_buckets_collapses_boilerplate(spark):
         [(i, f"{base} {'tail' + str(i) if i % 2 else ''}") for i in range(12)],
         "doc_id long, text string",
     )
-    for portable in (True, False):
-        out = drain_hot_buckets(
-            docs, "doc_id", "text", max_bucket_size=1, num_hashes=64, bands=16,
-            shingle_n=2, portable=portable,
-        ).collect()
-        rows = {r.doc_id: r for r in out}
-        assert sorted(rows) == list(range(12)), "every hot member appears once"
-        evens = [rows[i] for i in range(0, 12, 2)]
-        assert all(r.kind == "collapsed" for r in evens)
-        assert {r.keep_id for r in evens} == {0}
-        assert {r.family_size for r in evens} == {6}
-        for i in range(1, 12, 2):
-            r = rows[i]
-            # a tail-variant's family representative is itself an odd
-            # doc — it can never join the identical-text even family
-            assert r.keep_id is None or r.keep_id % 2 == 1
-            if r.kind == "deferred":
-                assert r.keep_id is None and r.family_size is None
+    out = drain_hot_buckets(
+        docs, "doc_id", "text", max_bucket_size=1, num_hashes=64, bands=16,
+        shingle_n=2,
+    ).collect()
+    rows = {r.doc_id: r for r in out}
+    assert sorted(rows) == list(range(12)), "every hot member appears once"
+    evens = [rows[i] for i in range(0, 12, 2)]
+    assert all(r.kind == "collapsed" for r in evens)
+    assert {r.keep_id for r in evens} == {0}
+    assert {r.family_size for r in evens} == {6}
+    for i in range(1, 12, 2):
+        r = rows[i]
+        # a tail-variant's family representative is itself an odd
+        # doc — it can never join the identical-text even family
+        assert r.keep_id is None or r.keep_id % 2 == 1
+        if r.kind == "deferred":
+            assert r.keep_id is None and r.family_size is None
 
 
 def test_scd2_history_fold(spark):

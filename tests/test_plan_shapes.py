@@ -344,7 +344,7 @@ def test_dedup_lake_probe_joins_never_shuffle_the_lake(spark, sf_dir, tmp_path):
         "exact layer must shuffle at most the batch digest distinct:\n" + p[:2000]
     )
 
-    batch_bands = D._lsh_band_rows(batch, "doc_id", "text", 64, 16, 2, portable=True)
+    batch_bands = D._lsh_band_rows(batch, "doc_id", "text", 64, 16, 2)
     p2 = (
         sink.cross_batch_candidates(lake_bands, batch_bands)
         ._jdf.queryExecution()

@@ -23,18 +23,14 @@ def test_lsh_hot_buckets_band_rows_param_equivalent(spark, sf_dir):
     the capped catalog entry's shared-frame form must surface exactly
     the same review-queue rows as the re-derive-from-text form."""
     d = _docs(spark, sf_dir).limit(400)
-    kwargs = dict(
-        max_bucket_size=2, num_hashes=64, bands=16, shingle_n=2, portable=True
-    )
+    kwargs = dict(max_bucket_size=2, num_hashes=64, bands=16, shingle_n=2)
     from_text = D.lsh_hot_buckets(d, "doc_id", "text", **kwargs)
     shared = D.lsh_hot_buckets(
         d,
         "doc_id",
         "text",
         band_rows=materialize_once(
-            D._lsh_band_rows(
-                d, "doc_id", "text", 64, 16, 2, portable=True, sig_kernel="sql"
-            )
+            D._lsh_band_rows(d, "doc_id", "text", 64, 16, 2)
         ),
         **kwargs,
     )
@@ -187,7 +183,7 @@ def test_minhash_verified_pairs_matches_split_composition(spark, sf_dir):
     for cap in (None, 2):
         cands = D.minhash_lsh_candidates(
             d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2,
-            max_bucket_size=cap, portable=True,
+            max_bucket_size=cap,
         )
         ref = D.verify_candidates_jaccard(
             d, cands, "doc_id", "text", threshold=0.8, shingle_n=2

@@ -485,7 +485,7 @@ def test_incremental_lsh_dedup_sink(spark, sf_dir, tmp_path):
 
     # (b) independent set: no verified pair survives among kept docs
     cands = D.minhash_lsh_candidates(
-        kept, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2, portable=True
+        kept, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2
     )
     pairs = D.verify_candidates_jaccard(kept, cands, "doc_id", "text", 0.8, 2)
     assert pairs.count() == 0, "kept corpus still contains verified near-dups"

@@ -307,76 +307,6 @@ def test_topk_batch_plan_lake_never_shuffled(spark, sf_dir, tmp_path):
         )
 
 
-def test_portable_minhash_batches_edge_docs():
-    """The numpy signature kernel's per-batch driver, exercised without
-    Spark: None/empty/short docs are OMITTED (the SQL pipeline's
-    explode-drops-them semantics), repeated tokens md5 once via the
-    task cache, and values reproduce the reference integer math."""
-    import hashlib
-
-    import pandas as pd
-
-    from gomaxscale_spark.operators.dedup import (
-        MINHASH_P,
-        MINHASH_R,
-        _portable_minhash_batches,
-        cw_hash_coefficients,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4, 5],
-            "text": ["alpha beta gamma alpha beta", "", None, "one", "  x\ty \n z  "],
-        }
-    )
-    out = list(_portable_minhash_batches(iter([pdf]), "doc_id", 8, 2))
-    assert len(out) == 1
-    got = dict(zip(out[0]["doc_id"], out[0]["minhash"]))
-    # docs 2 (empty), 3 (None), 4 (<2 tokens) omitted
-    assert set(got) == {1, 5}
-
-    def ref_sig(text, num_hashes, n):
-        toks = [t for t in text.split() if t]
-        th = [
-            int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % MINHASH_P
-            for t in toks
-        ]
-        sh = set()
-        for k in range(len(th) - n + 1):
-            h = th[k]
-            for i in range(1, n):
-                h = (h * MINHASH_R + th[k + i]) % MINHASH_P
-            sh.add(h)
-        return [
-            min((a * h + b) % MINHASH_P for h in sh)
-            for a, b in cw_hash_coefficients(num_hashes)
-        ]
-
-    assert list(got[1]) == ref_sig("alpha beta gamma alpha beta", 8, 2)
-    assert list(got[5]) == ref_sig("x y z", 8, 2)
-
-
-def test_portable_minhash_batches_chunking(monkeypatch):
-    """Shingle-mass chunking (SIG_CHUNK_SHINGLES) changes memory shape,
-    never values: force a tiny chunk bound and compare."""
-    import pandas as pd
-
-    from gomaxscale_spark.operators import dedup as D
-
-    docs = pd.DataFrame(
-        {
-            "doc_id": list(range(20)),
-            "text": [f"tok{i} " + " ".join(f"w{j}" for j in range(i + 2)) for i in range(20)],
-        }
-    )
-    big = list(D._portable_minhash_batches(iter([docs]), "doc_id", 16, 3))
-    monkeypatch.setattr(D, "SIG_CHUNK_SHINGLES", 4)
-    small = list(D._portable_minhash_batches(iter([docs]), "doc_id", 16, 3))
-    a = {i: list(m) for i, m in zip(big[0]["doc_id"], big[0]["minhash"])}
-    b = {i: list(m) for i, m in zip(small[0]["doc_id"], small[0]["minhash"])}
-    assert a == b and len(a) >= 18
-
-
 def test_topk_batch_rejects_duplicate_query_ids(spark, tmp_path):
     """VERDICT r10 item 5: per-query ranking partitions on query_id —
     duplicate ids would interleave two queries' candidates into one
@@ -409,101 +339,70 @@ def test_cluster_balanced_kernel_parity(spark, sf_dir):
 
 
 def test_sign_band_signatures_kernel_parity(spark, sf_dir):
-    """The Arrow matmul+pack signature kernel returns packed band
-    values IDENTICAL to the HOF per-plane folds on the full corpus
-    (also measured identical at x30/x100, SCALING.md r12) — signature
-    equality implies identical buckets, candidates, and results for
-    every downstream composition."""
+    """The Arrow matmul+pack signature kernel (``wide_band_signatures``)
+    returns packed band values IDENTICAL to the reference per-plane
+    folds (``lsh_signature_sql``) on the full corpus (also measured
+    identical at x30/x100, SCALING.md r12) — signature equality implies
+    identical buckets, candidates, and results for every downstream
+    composition."""
     emb = load_table(spark, sf_dir, "embeddings")
-    hof = {
+    planes = S.hyperplanes(64, 64, 42)
+    ref_cols = [
+        F.expr(S.lsh_signature_sql("embedding", planes[b * 16 : (b + 1) * 16])).alias(
+            f"s{b}"
+        )
+        for b in range(4)
+    ]
+    ref = {
+        r.vec_id: (r.s0, r.s1, r.s2, r.s3)
+        for r in emb.select("vec_id", *ref_cols).collect()
+    }
+    kern = {
         r.vec_id: (r.s0, r.s1, r.s2, r.s3)
         for r in S.wide_band_signatures(emb, dim=64).collect()
     }
-    np_ = {
-        r.vec_id: (r.s0, r.s1, r.s2, r.s3)
-        for r in S.wide_band_signatures(emb, dim=64, kernel="numpy").collect()
-    }
-    assert hof == np_ and hof
+    assert ref == kern and ref
 
-    planes = S.hyperplanes(64, 64, 42)
     with pytest.raises(ValueError, match="planes"):
         VK.sign_band_signatures(planes, 16, 5)
-    with pytest.raises(ValueError, match="unknown kernel"):
-        S.wide_band_signatures(emb, dim=64, kernel="blas")
-
-
-def test_adaptive_lsh_sig_kernel_parity(spark, sf_dir):
-    """sig_kernel='numpy' (now the catalog entries' path) returns the
-    identical verified pair set as the HOF signature pipeline."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    hof = S.lsh_near_duplicates_adaptive(emb, 0.3, 64).collect()
-    np_ = S.lsh_near_duplicates_adaptive(emb, 0.3, 64, sig_kernel="numpy").collect()
-    assert sorted(map(tuple, hof)) == sorted(map(tuple, np_))
-    assert hof, "fixture must contain near-dup pairs"
-    with pytest.raises(ValueError, match="unknown sig_kernel"):
-        S.lsh_near_duplicates_adaptive(emb, 0.3, 64, sig_kernel="blas")
 
 
 def test_embedding_lake_sig_kernel_stamp(spark, sf_dir, tmp_path):
-    """r12: the lake's signature kernel is persisted state — a
-    numpy-stamped lake ingests/probes identically to the HOF lake
-    (packed signatures measured identical), and opening a lake under
-    the other kernel fails LOUDLY at ingest and at probe."""
+    """The lake's signature kernel is persisted state: a fresh lake is
+    stamped 'numpy' on first ingest, and a lake stamped with anything
+    else — or holding kept/ state with no stamp (a pre-stamp lake) —
+    is refused LOUDLY, at ingest and at probe."""
+    import json
+    import os
+
     from gomaxscale_spark.streaming.embedding_index import (
         IncrementalEmbeddingIndexSink,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     ids = sorted(r.vec_id for r in emb.select("vec_id").collect())
-    cut = ids[len(ids) // 2]
-    b1 = emb.filter(F.col("vec_id") <= cut)
-    b2 = emb.filter(F.col("vec_id") > cut)
+    b1 = emb.filter(F.col("vec_id") <= ids[len(ids) // 2])
     q = [float(x) for x in emb.orderBy("vec_id").limit(1).head().embedding]
 
-    results = {}
-    for sk in ("hof", "numpy"):
-        sink = IncrementalEmbeddingIndexSink(
-            str(tmp_path / f"lake_{sk}"), threshold=0.3, sig_kernel=sk
-        )
-        sink.apply_batch(b1, 0)
-        sink.apply_batch(b2, 1)
-        kept = sorted(r.vec_id for r in sink.read_kept(spark).collect())
-        top = [(r.vec_id, r.score) for r in sink.topk(spark, q, k=5).collect()]
-        results[sk] = (kept, top)
-    assert results["hof"] == results["numpy"]
+    lake = str(tmp_path / "lake")
+    stamp = f"{lake}/sig_kernel.json"
+    IncrementalEmbeddingIndexSink(lake, threshold=0.3).apply_batch(b1, 0)
+    with open(stamp) as f:
+        assert json.load(f) == {"sig_kernel": "numpy"}
 
-    # mixing kernels on one lake: loud errors, ingest AND probe
-    wrong = IncrementalEmbeddingIndexSink(
-        str(tmp_path / "lake_numpy"), threshold=0.3, sig_kernel="hof"
-    )
-    with pytest.raises(ValueError, match="stamped sig_kernel='numpy'"):
-        wrong.apply_batch(b1, 2)
-    with pytest.raises(ValueError, match="stamped sig_kernel='numpy'"):
-        wrong.topk(spark, q, k=5)
+    # a lake stamped by another kernel: loud errors, ingest AND probe
+    with open(stamp, "w") as f:
+        json.dump({"sig_kernel": "hof"}, f)
+    sink = IncrementalEmbeddingIndexSink(lake, threshold=0.3)
+    with pytest.raises(ValueError, match="stamped sig_kernel='hof'"):
+        sink.apply_batch(b1, 1)
+    with pytest.raises(ValueError, match="stamped sig_kernel='hof'"):
+        sink.topk(spark, q, k=5)
 
-    # legacy lake (state but no stamp) counts as hof: numpy refuses
-    import os
-
-    legacy = str(tmp_path / "lake_hof")
-    os.remove(f"{legacy}/sig_kernel.json")
-    reopened = IncrementalEmbeddingIndexSink(
-        legacy, threshold=0.3, sig_kernel="numpy"
-    )
+    # kept/ state with no stamp: refused, never silently re-bucketed
+    os.remove(stamp)
     with pytest.raises(ValueError, match="pre-stamp state"):
-        reopened.apply_batch(b2, 3)
-
-    with pytest.raises(ValueError, match="unknown sig_kernel"):
-        IncrementalEmbeddingIndexSink(str(tmp_path / "x"), sig_kernel="blas")
-
-    # r13 (VERDICT r12 item 3): NEW lakes default to the numpy kernel —
-    # a full stamped round of parity evidence (the identical-signature
-    # A/B plus this test's batch≡batch run) made it the conservative
-    # choice. A LEGACY pre-stamp lake opened under the default must
-    # fail loudly, not silently re-bucket.
-    assert IncrementalEmbeddingIndexSink(str(tmp_path / "y")).sig_kernel == "numpy"
-    default_open = IncrementalEmbeddingIndexSink(legacy, threshold=0.3)
-    with pytest.raises(ValueError, match="pre-stamp state"):
-        default_open.apply_batch(b2, 4)
+        IncrementalEmbeddingIndexSink(lake, threshold=0.3).apply_batch(b1, 1)
 
 
 # ------------------------------------------ moment kernel (r15)

@@ -38,7 +38,7 @@ def main() -> None:
     def old_pairs(cap=None):
         cands = D.minhash_lsh_candidates(
             d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2,
-            max_bucket_size=cap, portable=True,
+            max_bucket_size=cap,
         )
         return D.verify_candidates_jaccard(
             d, cands, "doc_id", "text", threshold=0.8, shingle_n=2

@@ -195,7 +195,7 @@ def old_lsh_adaptive():
 
 
 def new_lsh_adaptive():
-    return S.lsh_near_duplicates_adaptive(emb, threshold=0.3, dim=64, sig_kernel="numpy")
+    return S.lsh_near_duplicates_adaptive(emb, threshold=0.3, dim=64)
 
 
 def old_cross_source():

@@ -67,7 +67,7 @@ def old_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lake_coverage").alias("evidence"),
     )
     cands = D.minhash_lsh_candidates(
-        d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2, portable=True
+        d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2
     )
     pairs = D.verify_candidates_jaccard(
         d, cands, "doc_id", "text", threshold=0.8, shingle_n=2
