@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from .bucketing import bucket_pairs, split_hot_keys
 from .bucketing import parallelize_narrow_input  # noqa: F401  (shared utility, re-exported)
 from .materialize import materialize_fixpoint, materialize_once, release
 
@@ -405,98 +406,9 @@ def _lsh_band_rows(
     shingle_n: int,
 ) -> DataFrame:
     """(id, band_id, band_hash) rows — one per (doc, band) — the shared
-    base of the bucket table and the hot-bucket review queue."""
+    base of the candidate buckets and the hot-bucket review queue."""
     sigs = portable_minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     return _band_rows_from_sigs(sigs, id_col, num_hashes, bands)
-
-
-def _lsh_bucket_counts(band_rows: DataFrame) -> DataFrame:
-    """(band_id, band_hash, n_members) for buckets with ≥2 members.
-
-    A pure count aggregation: map-side partial combine collapses even a
-    10⁸-member boilerplate bucket to one row per input partition, so
-    this pre-pass is skew-immune — no arrays, no membership lists.
-    """
-    return (
-        band_rows.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .filter(F.col("n_members") >= 2)
-    )
-
-
-def _lsh_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    max_bucket_size: int | None = None,
-    band_rows: DataFrame | None = None,
-) -> DataFrame:
-    """(band_id, band_hash, ids) bucket table — bounded BEFORE any
-    membership array exists.
-
-    Count-first discipline: sizes come from a skew-immune count
-    aggregation (`_lsh_bucket_counts`); only keys within the cap join
-    back to the band rows, so `collect_list` ever aggregates a bucket
-    that is already proven ≤ max_bucket_size. The naive order
-    (collect_list → filter size) would build a corpus-scale array in
-    one aggregation buffer for a boilerplate band hash — executor OOM
-    at 100 TB. Over-cap rows are *dropped during the join probe*
-    (streamed, never buffered); with AQE skew-join the hot key's
-    shuffle partition splits too. The band-row base is materialized once
-    (id + 2 longs per row — tiny next to the corpus) because both the
-    count pre-pass and the join consume it; without materialization the
-    shingle→minhash pipeline would run twice (strategy via
-    SPARK_GRAFT_MATERIALIZE — persist_disk on a real cluster, see
-    operators/materialize.py).
-    """
-    if band_rows is None:
-        band_rows = materialize_once(
-            _lsh_band_rows(df, id_col, text_col, num_hashes, bands, shingle_n)
-        )
-    counts = _lsh_bucket_counts(band_rows)
-    if max_bucket_size is not None:
-        counts = counts.filter(F.col("n_members") <= max_bucket_size)
-    return (
-        band_rows.join(counts.select("band_id", "band_hash"), ["band_id", "band_hash"])
-        .groupBy("band_id", "band_hash")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
-    )
-
-
-def lsh_hot_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_bucket_size: int,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    band_rows: DataFrame | None = None,
-) -> DataFrame:
-    """The review queue: buckets whose membership exceeds the cap.
-
-    At corpus scale a boilerplate shingle set (cookie banners, license
-    headers) collapses millions of docs into one band hash; expanding
-    such a bucket is O(n²) and would dominate the whole job. These
-    buckets are routed here instead — for exact-dedup pre-passes,
-    template stripping, or a tighter per-bucket re-LSH — while the
-    bounded buckets proceed through pair expansion. Built from the
-    count pre-pass alone: no membership array is ever materialized for
-    a hot bucket, only its size.
-
-    ``band_rows``: callers that already materialized this corpus's
-    (id, band_id, band_hash) rows (the capped catalog entry shares ONE
-    frame between its pair arm and this review-queue arm — r16
-    optimization round; without it the whole shingle→minhash signature
-    pipeline ran once per arm) pass them in, same contract as
-    ``minhash_lsh_candidates``.
-    """
-    if band_rows is None:
-        band_rows = _lsh_band_rows(df, id_col, text_col, num_hashes, bands, shingle_n)
-    return _lsh_bucket_counts(band_rows).filter(F.col("n_members") > max_bucket_size)
 
 
 def drain_hot_buckets(
@@ -539,20 +451,17 @@ def drain_hot_buckets(
 
     Scale: signatures are computed once (materialize_once — band rows
     and the collapse both consume them); hot keys come from the
-    skew-immune count pre-pass and are broadcast (bounded by duplicate-
-    family count — measured flat ~76k rows at the x100 replica,
-    SCALING.md r6); the only shuffles are the count agg, the hot-member
-    distinct, and the 8-byte family agg.
+    skew-immune count pre-pass (``split_hot_keys``) and are broadcast
+    (bounded by duplicate-family count — measured flat ~76k rows at the
+    x100 replica, SCALING.md r6); the only shuffles are the count agg,
+    the hot-member distinct, and the 8-byte family agg.
     """
     sigs = materialize_once(
         portable_minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     )
     band_rows = _band_rows_from_sigs(sigs, id_col, num_hashes, bands)
-    hot_keys = (
-        _lsh_bucket_counts(band_rows)
-        .filter(F.col("n_members") > max_bucket_size)
-        .select("band_id", "band_hash")
-    )
+    _, hot = split_hot_keys(band_rows, ["band_id", "band_hash"], max_bucket_size)
+    hot_keys = hot.select("band_id", "band_hash")
     hot_ids = (
         band_rows.join(F.broadcast(hot_keys), ["band_id", "band_hash"])
         .select(id_col)
@@ -610,44 +519,37 @@ def minhash_lsh_candidates(
     candidate set bit-for-bit — parity is deterministic on any corpus,
     independent of banding recall.
 
-    Scale: explode each doc into `bands` (band_id, band_hash) keys →
-    self-join on them. The shuffle carries (doc_id, 16 band hashes), not
-    documents. Hot buckets (boilerplate) are the classic skew source —
-    AQE skew-join handles moderate skew; pass ``max_bucket_size`` to
-    cap the per-bucket quadratic expansion and route overflow buckets
-    to the ``lsh_hot_buckets`` review queue. Candidate pairs then get
-    exact verification (jaccard below).
+    Scale: explode each doc into `bands` (band_id, band_hash) keys and
+    expand every bucket into its pairs in place (``bucket_pairs``: one
+    exchange on the band key carrying (doc_id, band key), never
+    documents; no self-join, so the signature pipeline runs once).
+    Hot buckets (boilerplate: cookie banners, license headers collapse
+    millions of docs into one band hash) are the classic skew source —
+    one bucket of n members is an O(n²) expansion in one task. Pass
+    ``max_bucket_size`` to cap it count-first (``split_hot_keys``):
+    over-cap keys never build a membership array; callers that keep
+    the review queue take the hot keys from ``split_hot_keys``
+    themselves. Candidate pairs then get exact verification (jaccard
+    below).
+
+    ``band_rows``: callers that already materialized this corpus's
+    (id, band_id, band_hash) rows (the streaming sink and the fused
+    pipelines compute them once and share them across stages) pass
+    them in to skip a re-run of the whole signature pipeline.
     """
-    # pair generation INSIDE buckets (collect_list + combination expansion)
-    # instead of a bucket-keyed self-join: a self-join would evaluate the
-    # entire signature pipeline twice (one per side — different
-    # projections, so no exchange reuse; measured ~2× the query). This
-    # shape computes signatures once and shuffles each doc's 16 band
-    # keys once; buckets are tiny by LSH construction, so the per-bucket
-    # quadratic expansion is bounded (hot-boilerplate buckets get capped
-    # into the lsh_hot_buckets review queue at corpus scale).
-    # ``band_rows``: callers that already materialized this batch's
-    # (id, band_id, band_hash) rows (the streaming sink computes them
-    # once and shares them across three stages) pass them in to skip
-    # a re-run of the whole signature pipeline.
-    buckets = _lsh_buckets(
-        df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket_size,
-        band_rows,
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
+    if band_rows is None:
+        # id + 2 longs per row; with a cap, the count pre-pass and the
+        # join both read it
+        band_rows = materialize_once(
+            _lsh_band_rows(df, id_col, text_col, num_hashes, bands, shingle_n)
         )
-    )
-    return (
-        buckets.select(F.explode(combos).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    keys = ["band_id", "band_hash"]
+    if max_bucket_size is not None:
+        within, _ = split_hot_keys(band_rows, keys, max_bucket_size)
+        # one-member keys make no pair; this filter lands on the counts,
+        # so their rows never reach the collect
+        band_rows = within.filter(F.col("n_members") >= 2)
+    return bucket_pairs(band_rows, keys, id_col)
 
 
 def prefix_filter_candidates(
@@ -1357,11 +1259,13 @@ def simhash_near_duplicates(
 
     Banding: split the `bits`-wide hash into 4 equal chunks; any pair
     at hamming ≤ 3 agrees exactly on ≥1 chunk (pigeonhole — recall is
-    EXACTLY 1, not probabilistic) → self-join per chunk, then exact
-    hamming verify via bit_count(xor).
+    EXACTLY 1, not probabilistic) → in-bucket pair expansion per chunk
+    (``bucket_pairs``), then exact hamming verify via bit_count(xor).
 
     Scale: shuffle key is (chunk_id, chunk value) — 4 rows per doc;
-    the verify is a map. Same skew caveat as MinHash buckets.
+    the verify is a map. Chunk buckets are NOT capped: expected size
+    is N/2^(bits/4) per chunk, boilerplate concentrates more, and each
+    bucket expands quadratically in one task.
     """
     chunk_bits = bits // 4
     mask = (1 << chunk_bits) - 1
@@ -1385,36 +1289,15 @@ def simhash_near_duplicates(
             )
         ).alias("ck"),
     ).select(id_col, "__sh", "ck.chunk_id", "ck.chunk")
-    # same bucket-collect pair expansion as minhash_lsh_candidates: a
-    # chunk-keyed self-join would run the 64-column signature agg twice
-    buckets = (
-        chunks.groupBy("chunk_id", "chunk")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("__sh").alias("sh")))
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("members"),
-            lambda x, i: F.transform(
-                F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
-                ),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(combos).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    # the signature rides along as a carry column, so the hamming
+    # verify needs no re-join; a chunk-keyed self-join would run the
+    # 64-column signature agg twice
+    pairs = bucket_pairs(chunks, ["chunk_id", "chunk"], id_col, carry=("__sh",))
+    return pairs.select(
+        "id_a",
+        "id_b",
+        F.bit_count(F.col("__sh_a").bitwiseXOR(F.col("__sh_b"))).alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def incremental_dedup(

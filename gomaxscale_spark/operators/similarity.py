@@ -22,7 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from .bucketing import parallelize_narrow_input
+from .bucketing import bucket_pairs, parallelize_narrow_input
 from .materialize import materialize_once
 
 
@@ -211,10 +211,13 @@ def lsh_near_duplicates(
     expansion is bounded by the signature width, not by a fixed label
     cardinality (the label-blocked exact variant goes quadratic per
     label as the corpus grows — measured 22× wall at 10× rows in
-    SCALING.md). The bucket join carries (band, sig, id) only; vectors
-    are re-joined just for the deduped candidate set, so verify cost is
-    ∝ candidates. Signatures are ingest-computable → cluster/partition
-    key at the lake layer.
+    SCALING.md). The bucket exchange carries (band, sig, id) only and
+    pairs expand inside each bucket (``bucket_pairs``); vectors are
+    re-joined just for the deduped candidate set, so verify cost is
+    ∝ candidates. Buckets are uncapped: a population of zero or
+    constant vectors shares one signature and expands quadratically.
+    Signatures are ingest-computable → cluster/partition key at the
+    lake layer.
     """
     all_planes = hyperplanes(dim, n_bands * planes_per_band, seed)
     # materialize the (vid, vec, nrm) frame once (r17 — same fix as the
@@ -245,34 +248,9 @@ def lsh_near_duplicates(
             )
         ).alias("bs"),
     ).select("vid", "bs.band", "bs.sig")
-    # pair generation INSIDE buckets (r17 — the r16 adaptive-variant
-    # lesson applied to the fixed-width form): the (band, sig)-keyed
-    # self-join's two sides carried different aliases, so no exchange
-    # reuse fired and the whole per-plane HOF signature pipeline
-    # executed once per side. Buckets are N/2^planes_per_band-sized by
-    # the banding construction; same pairs, one signature pass.
-    cand = (
-        stacked.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list("vid")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    # expected bucket size is N/2^planes_per_band by the banding
+    # construction; pairs expand inside each bucket, one signature pass
+    cand = bucket_pairs(stacked, ["band", "sig"], "vid")
     va = with_norm.select(
         F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("norm_a")
     )
@@ -418,38 +396,11 @@ def lsh_near_duplicates_adaptive(
             )
         ).alias("bs"),
     ).select("vid", "bs.band", "bs.bucket")
-    # pair generation INSIDE buckets (collect + combination expansion)
-    # instead of a bucket-keyed self-join (r16 optimization round,
-    # guide §2.4 — the minhash_lsh_candidates lesson finally applied to
-    # the embedding side): the self-join's two sides carried different
-    # aliases, so no exchange reuse — the WHOLE signature pipeline
-    # (even the Arrow matmul kernel) executed once per side. Bucket
-    # membership arrays are bounded by construction here: the adaptive
-    # width pins expected bucket size at ~target_bucket (64), which is
-    # exactly why the text path's hot-bucket cap machinery isn't needed.
-    # One signature pass, one (band, bucket) exchange, same pairs.
-    cand = (
-        stacked.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("vid")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    # pairs expand inside each (band, bucket): one signature pass, one
+    # exchange. The adaptive width pins the EXPECTED bucket size at
+    # ~target_bucket; it does not bound the worst case — zero or
+    # constant vectors share one bucket, and this expansion is uncapped
+    cand = bucket_pairs(stacked, ["band", "bucket"], "vid")
     va = with_norm.select(
         F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("norm_a")
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as D
+from ..operators.bucketing import split_hot_keys
 from ..operators.materialize import materialize_once
 from ..operators import multimodal as M
 from ..operators import sampling as SA
@@ -460,10 +461,8 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("band_key"),
         F.lit(None).cast("long").alias("n_members"),
     )
-    hot = D.lsh_hot_buckets(
-        d, "doc_id", "text", max_bucket_size=cap, num_hashes=64, bands=16,
-        shingle_n=2, band_rows=band_rows,
-    ).select(
+    _, hot = split_hot_keys(band_rows, ["band_id", "band_hash"], cap)
+    hot = hot.select(
         F.lit("hot_bucket").alias("kind"),
         F.lit(None).cast("long").alias("id_a"),
         F.lit(None).cast("long").alias("id_b"),
@@ -2705,7 +2704,7 @@ def sampling_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Boilerplate detector: word 4-grams whose document frequency "
     "crosses a threshold — cookie banners, license headers, templated "
     "chrome. This is the upstream producer for the LSH hot-bucket "
-    "strip stage (operators/dedup.py lsh_hot_buckets): stripping "
+    "strip stage (operators/bucketing.py split_hot_keys): stripping "
     "high-DF grams before shingling is what keeps near-dup bucket "
     "sizes bounded at corpus scale. Scale: one explode + one "
     "partial-agg'd count keyed by gram — each (doc, gram) pair "
@@ -5907,7 +5906,7 @@ def _split_case_sql(idc: str) -> str:
     "inside the audit itself. Here bucket sizes come from the "
     "skew-immune count pre-pass, only 2 ≤ n ≤ cap buckets expand, "
     "and over-cap keys flow to the standing review queue "
-    "(lsh_hot_buckets) rather than this matrix — so the audit's "
+    "(split_hot_keys) rather than this matrix — so the audit's "
     "cost is bounded BEFORE any pair exists, at any corpus size. "
     "The split is still a pure id function: zero joins, zero "
     "exchanges on top of the audited pipeline.",

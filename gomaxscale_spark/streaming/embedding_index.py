@@ -67,7 +67,12 @@ import shutil
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.bucketing import split_hot_keys
 from .epoch import EpochCommit
+
+#: the capped lake's bucket key: the mask width ``__p2`` is one value
+#: per plan, carried so review rows record the width they were counted at
+_LAKE_KEY = ["band", "bucket", "__p2"]
 
 
 class IncrementalEmbeddingIndexSink:
@@ -109,14 +114,15 @@ class IncrementalEmbeddingIndexSink:
         #: but a pathological sign region (near-zero vectors, constant
         #: embeddings from a broken upstream encoder) can concentrate
         #: far more. With a cap set (sensible values are several ×
-        #: target_bucket), over-cap lake keys skip the auto cross-batch
-        #: join and surface as (band, bucket, p2, n_members) rows under
-        #: ``review/epoch=N`` — deferred, never silently dropped;
-        #: ``drain_review()`` collapses their full-signature families.
-        #: Asymmetry, stated plainly: the WITHIN-batch pipeline stays
-        #: uncapped — its fan-out is bounded by the trigger's batch
-        #: size, which the stream owner controls, unlike the lake side
-        #: which grows without bound.
+        #: target_bucket), over-cap lake keys (operators/bucketing.py
+        #: split_hot_keys) skip the auto cross-batch join and surface as
+        #: (band, bucket, p2, n_members) rows under ``review/epoch=N`` —
+        #: deferred, never silently dropped; ``drain_review()`` collapses
+        #: their full-signature families. The cap covers the LAKE side
+        #: only. The within-batch leg (``lsh_near_duplicates_adaptive``)
+        #: is uncapped: a batch of b identical or zero vectors expands
+        #: b(b-1)/2 pairs per band in one task, limited only by the
+        #: trigger's batch size.
         self.max_bucket_size = max_bucket_size
         #: small-files control loop (r9): when set, ``apply_batch``
         #: runs ``compact()`` automatically once the lake holds ≥
@@ -224,8 +230,11 @@ class IncrementalEmbeddingIndexSink:
         full signatures with the CURRENT width (``sig % 2^w``, w from
         the 1-row in-plan count ``nn``), then the batch's band rows
         BROADCAST against the lake index — the lake is scanned, never
-        shuffled (plan-pinned in tests/test_plan_shapes.py)."""
+        shuffled (plan-pinned in tests/test_plan_shapes.py). With a cap
+        set, only lake keys within it enter the join."""
         lb = self._masked(lake_bands, nn, "id_a")
+        if self.max_bucket_size is not None:
+            lb, _ = split_hot_keys(lb, _LAKE_KEY, self.max_bucket_size)
         bb = self._masked(batch_bands, nn, "id_b")
         return (
             lb.join(F.broadcast(bb.drop("__p2")), ["band", "bucket"])
@@ -289,37 +298,21 @@ class IncrementalEmbeddingIndexSink:
                     .agg(F.count(F.lit(1)).alias("__n"))
                 )
                 if self.max_bucket_size is not None:
-                    # count-first cap on the LAKE side (sizes from a
-                    # skew-immune count agg): over-cap keys are routed
-                    # to review/ BEFORE any join fan-out exists, with
-                    # the mask width they were counted at (widths vary
-                    # across epochs as the lake grows — the drain
-                    # re-derives membership per stored width)
-                    lb = self._masked(lake_bands, nn, "id_a")
-                    key_counts = lb.groupBy("band", "bucket", "__p2").agg(
-                        F.count(F.lit(1)).alias("n_members")
+                    # over-cap lake keys go to review/ with the mask
+                    # width they were counted at (widths vary across
+                    # epochs as the lake grows — the drain re-derives
+                    # membership per stored width)
+                    _, hot = split_hot_keys(
+                        self._masked(lake_bands, nn, "id_a"),
+                        _LAKE_KEY,
+                        self.max_bucket_size,
                     )
-                    key_counts.filter(
-                        F.col("n_members") > self.max_bucket_size
-                    ).withColumnRenamed("__p2", "p2").write.mode(
+                    hot.withColumnRenamed("__p2", "p2").write.mode(
                         "overwrite"
                     ).parquet(f"{self.path}/review/epoch={epoch_id}")
-                    lb = lb.join(
-                        key_counts.filter(
-                            F.col("n_members") <= self.max_bucket_size
-                        ).select("band", "bucket"),
-                        ["band", "bucket"],
-                    )
-                    bb = self._masked(batch_bands, nn, "id_b")
-                    cross = materialize_once(
-                        lb.join(F.broadcast(bb.drop("__p2")), ["band", "bucket"])
-                        .select("id_a", "id_b")
-                        .distinct()
-                    )
-                else:
-                    cross = materialize_once(
-                        self.cross_batch_candidates(lake_bands, batch_bands, nn)
-                    )
+                cross = materialize_once(
+                    self.cross_batch_candidates(lake_bands, batch_bands, nn)
+                )
                 to_release.append(cross)
                 if not cross.isEmpty():
                     cand_lake = cross.select(F.col("id_a").alias(id_c)).distinct()

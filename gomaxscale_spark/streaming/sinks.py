@@ -31,9 +31,11 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.bucketing import split_hot_keys
 from ..operators.snapshot import materialize_snapshot
 from .epoch import EpochCommit
 
@@ -428,9 +430,12 @@ class IncrementalLSHDedupSink:
                     batch joins against, so cross-batch candidate
                     generation costs a band-key equi-join — never a
                     scan of lake text
-      ``review/epoch=N/`` — over-cap lake band keys deferred in epoch N
-                    (capped mode only); keyed by epoch, so a persistent
-                    hot key yields one row per epoch, not per retry
+      ``review/epoch=N/`` — over-cap band keys deferred in epoch N
+                    (capped mode only): the lake side's hot keys and the
+                    batch's own, each (band_id, band_hash, n_members)
+                    counted on its side — a key hot on both sides has
+                    two rows. Keyed by epoch, so a persistent hot key
+                    yields rows per epoch, not per retry
 
     Per micro-batch:
       1. exact layer: md5-digest anti-join vs kept digests + min-id
@@ -440,8 +445,9 @@ class IncrementalLSHDedupSink:
          (text pulled only for candidate-adjacent docs) → matched batch
          docs drop (greedy: the earlier-kept doc stays the
          representative);
-      3. within-batch near-dup: the bounded LSH pipeline + star-CC,
-         keep the min-id representative per cluster;
+      3. within-batch near-dup: the capped LSH pipeline + star-CC,
+         keep the min-id representative per cluster (over-cap batch
+         keys go to review/ in this same epoch);
       4. commit epoch N's survivors + band rows + review rows to their
          epoch directories, then write the ``_epoch_N`` marker.
 
@@ -526,11 +532,14 @@ class IncrementalLSHDedupSink:
         #: doc's band rows forever, so one boilerplate band key
         #: eventually matches millions of lake rows — the same hot-
         #: bucket quadratic the batch operators cap count-first.
-        #: With a cap set, over-cap lake keys skip the auto join and
+        #: With a cap set, over-cap keys skip pair generation and
         #: surface as (band_id, band_hash, n_members) rows under
-        #: ``review/epoch=N`` — the deferred-work channel; within-batch
-        #: candidate generation gets the same cap via
-        #: minhash_lsh_candidates(max_bucket_size=...).
+        #: ``review/epoch=N`` — the deferred-work channel. Both legs
+        #: are capped through operators/bucketing.py split_hot_keys:
+        #: the lake side of the cross-batch join and the within-batch
+        #: buckets, whose hot keys land in the SAME epoch's review/
+        #: (so ``drain_review`` can act on a lake whose last batch
+        #: made a key hot).
         self.max_bucket_size = max_bucket_size
         #: fault-injection hook for the commit-protocol tests ONLY:
         #: "kept" raises after the kept/ write (before bands/), "bands"
@@ -722,6 +731,10 @@ class IncrementalLSHDedupSink:
         # session's lifetime (the exact accumulation release() exists
         # to bound)
         to_release: list[DataFrame] = [band_rows_all]
+        band_key = ["band_id", "band_hash"]
+        # over-cap (band_id, band_hash, n_members) keys, lake side and
+        # batch side, written together to review/epoch=N
+        hot: list[DataFrame] = []
 
         def rows_for(docs: DataFrame) -> DataFrame:
             ids = docs.select(id_c).distinct()
@@ -732,23 +745,12 @@ class IncrementalLSHDedupSink:
         if lake_bands is not None and kept is not None:
             lake_bands = lake_bands.select(id_c, "band_id", "band_hash")
             if self.max_bucket_size is not None:
-                # count-first cap on the LAKE side of the join: sizes
-                # from a skew-immune count agg, over-cap keys routed to
-                # the epoch's review/ dir BEFORE any join fan-out exists
-                key_counts = lake_bands.groupBy("band_id", "band_hash").agg(
-                    F.count(F.lit(1)).alias("n_members")
+                # count-first cap on the LAKE side of the join: over-cap
+                # keys go to review/ before any join fan-out exists
+                lake_bands, lake_hot = split_hot_keys(
+                    lake_bands, band_key, self.max_bucket_size
                 )
-                key_counts.filter(
-                    F.col("n_members") > self.max_bucket_size
-                ).write.mode("overwrite").parquet(
-                    f"{self.path}/review/epoch={epoch_id}"
-                )
-                lake_bands = lake_bands.join(
-                    key_counts.filter(
-                        F.col("n_members") <= self.max_bucket_size
-                    ).select("band_id", "band_hash"),
-                    ["band_id", "band_hash"],
-                )
+                hot.append(lake_hot)
             batch_bands = band_rows_all  # batch is un-filtered at this point
             # empty-candidate fast path: cross is id pairs (tiny);
             # materialize it once so the emptiness probe AND the verify
@@ -773,12 +775,17 @@ class IncrementalLSHDedupSink:
 
         # 3. within-batch near-dup: bounded LSH + star-CC, min-id reps —
         # with the same empty-candidate fast path (no bucket collisions
-        # → skip verify AND the star-CC fixpoint rounds entirely)
+        # → skip verify AND the star-CC fixpoint rounds entirely). The
+        # batch's hot keys join the lake's in this epoch's review/.
+        batch_rows = rows_for(batch)
+        if self.max_bucket_size is not None:
+            _, batch_hot = split_hot_keys(batch_rows, band_key, self.max_bucket_size)
+            hot.append(batch_hot)
         cands = materialize_once(
             D.minhash_lsh_candidates(
                 batch, id_c, txt, self.num_hashes, self.bands, self.shingle_n,
                 max_bucket_size=self.max_bucket_size,
-                band_rows=rows_for(batch),
+                band_rows=batch_rows,
             )
         )
         to_release.append(cands)
@@ -794,12 +801,18 @@ class IncrementalLSHDedupSink:
                 F.broadcast(drop), F.col(id_c) == F.col("id"), "left_anti"
             )
 
-        # 4. commit: epoch-scoped kept + band-index dirs, then the marker
+        # 4. commit: epoch-scoped review + kept + band-index dirs, then
+        # the marker
         survivors = materialize_once(survivors)
         to_release.append(survivors)
-        # survivors is eagerly materialized above, so cross/cands/
-        # band_rows_all have no remaining consumers — all safe to free
+        # survivors is eagerly materialized above, so after the review
+        # write cross/cands/band_rows_all have no remaining consumers —
+        # all safe to free
         try:
+            if hot:
+                reduce(DataFrame.unionByName, hot).write.mode("overwrite").parquet(
+                    f"{self.path}/review/epoch={epoch_id}"
+                )
             survivors.write.mode("overwrite").parquet(
                 f"{self.path}/kept/epoch={epoch_id}"
             )

@@ -160,8 +160,11 @@ def test_warm_construction_jobs_budget(spark, sf_dir):
         "text_quality_score": 0,
         "text_gopher_rules": 0,
         "dedup_minhash_lsh": 11,
+        "dedup_minhash_lsh_capped": 11,
+        "dedup_embedding_lsh_scaled": 1,
     }
     load_table(spark, sf_dir, "documents")
+    load_table(spark, sf_dir, "embeddings")
     for name, most in budget.items():
         _, jobs = _jobs(spark, lambda: q[name].fn(spark, sf_dir))
         assert jobs <= most, (name, jobs, most)

@@ -513,7 +513,8 @@ def test_lsh_bucket_cap_routes_hot_buckets_to_review(spark, near_dup_corpus):
     """The 30-doc boilerplate family collapses into shared band buckets;
     a cap below 30 must (a) drop its pair expansion from candidates and
     (b) surface the overflow buckets in the review queue."""
-    from gomaxscale_spark.operators.dedup import lsh_hot_buckets
+    from gomaxscale_spark.operators.bucketing import split_hot_keys
+    from gomaxscale_spark.operators.dedup import _lsh_band_rows
 
     uncapped = minhash_lsh_candidates(
         near_dup_corpus, "doc_id", "text", num_hashes=64, bands=16, shingle_n=2
@@ -524,10 +525,12 @@ def test_lsh_bucket_cap_routes_hot_buckets_to_review(spark, near_dup_corpus):
     )
     n_unc, n_cap = uncapped.count(), capped.count()
     assert n_cap < n_unc, "cap did not reduce pair expansion"
-    hot = lsh_hot_buckets(
-        near_dup_corpus, "doc_id", "text", max_bucket_size=10,
-        num_hashes=64, bands=16, shingle_n=2,
-    ).collect()
+    _, hot = split_hot_keys(
+        _lsh_band_rows(near_dup_corpus, "doc_id", "text", 64, 16, 2),
+        ["band_id", "band_hash"],
+        10,
+    )
+    hot = hot.collect()
     assert hot, "expected overflow buckets in the review queue"
     assert all(r.n_members > 10 for r in hot)
     # the small identical-pair family (docs 300/301) must survive the cap
@@ -540,11 +543,14 @@ def test_lsh_bucket_cap_precedes_collect_list(spark, near_dup_corpus):
     membership array is ever built for a bucket that wasn't already
     proven ≤ cap by the (skew-immune) count pre-pass. Physical plans
     print root-first, so 'above' means an earlier string offset."""
-    from gomaxscale_spark.operators.dedup import _lsh_buckets
+    from gomaxscale_spark.operators.bucketing import bucket_pairs, split_hot_keys
+    from gomaxscale_spark.operators.dedup import _lsh_band_rows
 
-    df = _lsh_buckets(
-        near_dup_corpus, "doc_id", "text", 64, 16, 2, max_bucket_size=10
+    key = ["band_id", "band_hash"]
+    within, _ = split_hot_keys(
+        _lsh_band_rows(near_dup_corpus, "doc_id", "text", 64, 16, 2), key, 10
     )
+    df = bucket_pairs(within, key, "doc_id")
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" in p
     joins = [
@@ -559,6 +565,51 @@ def test_lsh_bucket_cap_precedes_collect_list(spark, near_dup_corpus):
     )
     # and the cap itself is applied to the count column, below the join
     assert "n_members" in p and p.index("n_members") > first_join
+
+
+def test_bucket_pairs_matches_combinations_reference(spark):
+    """bucket_pairs ≡ itertools.combinations over each key's sorted
+    members, carry values attached per side, distinct across keys."""
+    import itertools
+    import random
+
+    rng = random.Random(11)
+    # one row per (band, id), as LSH band rows are: a pair sharing
+    # several bands must still come out once
+    rows = [(band, rng.randrange(4), i) for i in range(60) for band in range(3)]
+    df = spark.createDataFrame(rows, "k1 int, k2 int, id long").withColumn(
+        "w", F.col("id") * 7 % 13
+    )
+    members: dict = {}
+    for k1, k2, i in rows:
+        members.setdefault((k1, k2), set()).add(i)
+    expected = {
+        (a, b, a * 7 % 13, b * 7 % 13)
+        for ids in members.values()
+        for a, b in itertools.combinations(sorted(ids), 2)
+    }
+    from gomaxscale_spark.operators.bucketing import bucket_pairs
+
+    got = bucket_pairs(df, ["k1", "k2"], "id", carry=("w",))
+    assert got.columns == ["id_a", "id_b", "w_a", "w_b"]
+    out = [tuple(r) for r in got.collect()]
+    assert len(out) == len(set(out))
+    assert set(out) == expected and len(expected) > 50
+    plain = {tuple(r) for r in bucket_pairs(df, ["k1", "k2"], "id").collect()}
+    assert plain == {(a, b) for a, b, _, _ in expected}
+
+
+def test_split_hot_keys_bounds_one_hot_key(spark):
+    """Degenerate input: 10⁵ rows on ONE key. The count-first cap
+    routes the key to hot_keys before any membership array exists, so
+    the capped expansion yields 0 pairs quickly instead of building the
+    5·10⁹-pair expansion of the uncapped bucket."""
+    from gomaxscale_spark.operators.bucketing import bucket_pairs, split_hot_keys
+
+    rows = spark.range(100_000).select(F.lit(7).alias("k"), F.col("id"))
+    within, hot = split_hot_keys(rows, ["k"], 64)
+    assert bucket_pairs(within, ["k"], "id").count() == 0
+    assert [tuple(r) for r in hot.collect()] == [(7, 100_000)]
 
 
 def test_benchmark_contamination_bounds_and_exact_dup(spark):

@@ -18,22 +18,27 @@ def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def test_lsh_hot_buckets_band_rows_param_equivalent(spark, sf_dir):
-    """lsh_hot_buckets(band_rows=precomputed) == lsh_hot_buckets(text):
-    the capped catalog entry's shared-frame form must surface exactly
-    the same review-queue rows as the re-derive-from-text form."""
+def test_split_hot_keys_band_rows_source_equivalent(spark, sf_dir):
+    """The capped catalog entry's hot set: band rows derived from the
+    shared tokenized artifact must surface exactly the same review-queue
+    rows (``split_hot_keys``) as band rows re-derived from the text."""
+    from gomaxscale_spark.operators.bucketing import split_hot_keys
+
     d = _docs(spark, sf_dir).limit(400)
-    kwargs = dict(max_bucket_size=2, num_hashes=64, bands=16, shingle_n=2)
-    from_text = D.lsh_hot_buckets(d, "doc_id", "text", **kwargs)
-    shared = D.lsh_hot_buckets(
-        d,
-        "doc_id",
-        "text",
-        band_rows=materialize_once(
-            D._lsh_band_rows(d, "doc_id", "text", 64, 16, 2)
-        ),
-        **kwargs,
+    key = ["band_id", "band_hash"]
+    _, from_text = split_hot_keys(
+        D._lsh_band_rows(d, "doc_id", "text", 64, 16, 2), key, 2
     )
+    tokd = D.tokenized_corpus_artifact(d, "doc_id", "text")
+    shared_rows = materialize_once(
+        D._band_rows_from_sigs(
+            D.portable_minhash_signatures_from_hashes(
+                tokd, "doc_id", "__th60", num_hashes=64, shingle_n=2
+            ),
+            "doc_id", 64, 16,
+        )
+    )
+    _, shared = split_hot_keys(shared_rows, key, 2)
     a = sorted(map(tuple, from_text.collect()))
     b = sorted(map(tuple, shared.collect()))
     assert a == b and len(a) > 0

@@ -662,12 +662,15 @@ def test_incremental_lsh_dedup_sink_drain_review(spark, tmp_path):
     """The deferred-work channel is DRAINABLE end-to-end. With cap=1
     blocking all candidate generation, two repetition-class near-dups
     ('alpha beta' ×2 vs ×3 — IDENTICAL 2-shingle sets, different
-    digests) both enter the lake and make their band keys hot;
-    drain_review collapses the full-signature family (min-id kept),
+    digests) both enter the lake and make their band keys hot. The
+    within-batch hot keys reach review/ in that same epoch, so the lake
+    is drainable after the first batch. drain_review collapses the
+    full-signature family (min-id kept),
     republishes kept/bands, consumes review/ — and, the closure, the
     cooled keys ride the AUTO cross-batch path again: the next
     repetition arrival is dropped without any review row."""
     import os
+    import shutil
 
     from gomaxscale_spark.streaming.sinks import IncrementalLSHDedupSink
 
@@ -686,7 +689,14 @@ def test_incremental_lsh_dedup_sink_drain_review(spark, tmp_path):
     kept_ids = {r.doc_id for r in sink.read_kept(spark).collect()}
     assert {0, 1} <= kept_ids, "cap=1 must defer the within-batch near-dup pair"
 
-    # the next batch's lake-side count pass surfaces the hot keys
+    # the within-batch hot keys reach review/ in the epoch that made
+    # them: a copy of the lake after b0 alone is already drainable
+    assert spark.read.parquet(f"{path}/review").count() > 0
+    shutil.copytree(path, f"{path}_b0")
+    b0_only = IncrementalLSHDedupSink(f"{path}_b0", threshold=0.8, max_bucket_size=1)
+    assert b0_only.drain_review(spark) == 1
+
+    # the next batch's lake-side count pass surfaces the hot keys too
     sink.apply_batch(
         spark.createDataFrame(fillers[3:], "doc_id long, text string"), 1
     )
