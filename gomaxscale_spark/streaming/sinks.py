@@ -34,6 +34,7 @@ import shutil
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.bucketing import split_hot_keys
 from ..operators.snapshot import materialize_snapshot
@@ -77,6 +78,10 @@ class CDCSnapshotSink:
         self.event_type_col = event_type_col
         self.n_buckets = n_buckets
         self._commit = EpochCommit(path)
+        # schema of the live buckets as last staged: the sink is the
+        # directory's only writer, so reading them needs no inference
+        # job; None until this instance publishes (e.g. after a restart)
+        self._schema: StructType | None = None
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         self.apply_batch(batch_df)
@@ -94,7 +99,9 @@ class CDCSnapshotSink:
            same latest-wins window as the batch operator — the
            partition filter prunes untouched buckets' files out of the
            scan, so per-batch read cost is O(touched buckets), not
-           O(snapshot);
+           O(snapshot). The live buckets are read with the schema this
+           instance last staged; only an instance's first batch over an
+           existing snapshot (a restart) runs a schema-inference job;
         3. publish: stage the folded buckets, then swap each touched
            bucket's directory. A touched bucket with no surviving rows
            (every key deleted) is removed. Untouched buckets' files are
@@ -125,7 +132,10 @@ class CDCSnapshotSink:
         if os.path.isdir(self.path) and any(
             e.startswith("__bucket=") for e in os.listdir(self.path)
         ):
-            current = spark.read.parquet(self.path)
+            reader = spark.read
+            if self._schema is not None:
+                reader = reader.schema(self._schema)
+            current = reader.parquet(self.path)
             # partition filter → pruned scan: untouched buckets unread
             merged_input = current.filter(
                 F.col("__bucket").isin(touched)
@@ -136,10 +146,10 @@ class CDCSnapshotSink:
             merged_input, self.key_cols, self.order_cols, self.event_type_col
         )
         staged = self.path + "._staged"
-        new_state.withColumn("__bucket", self._bucket()).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(staged)
+        staged_df = new_state.withColumn("__bucket", self._bucket())
+        staged_df.write.mode("overwrite").partitionBy("__bucket").parquet(staged)
         self._commit.swap_bucket_dirs(staged, self.path, touched)
+        self._schema = staged_df.schema
 
     def read_snapshot(self, spark) -> DataFrame:
         return spark.read.parquet(self.path).drop("__bucket")

@@ -13,7 +13,6 @@ inferred again.
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -53,19 +52,6 @@ def _write_events(dirpath, ts_array):
     pq.write_table(table, tmp)
     os.replace(tmp, f"{dirpath}/events.parquet")
     return str(dirpath)
-
-
-def _jobs(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"test_catalog_schema:{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _ts_ns(df):
@@ -110,28 +96,28 @@ def test_both_encodings_agree_on_ts_wall_clock(spark, tmp_path):
 
 
 @pytest.mark.parametrize("encoding", sorted(ENCODINGS))
-def test_second_load_runs_no_jobs(spark, tmp_path, encoding):
+def test_second_load_runs_no_jobs(spark, tmp_path, encoding, spark_jobs):
     ts, want = ENCODINGS[encoding]
     d = _write_events(tmp_path, ts)
-    first, jobs = _jobs(spark, lambda: load_table(spark, d, "events"))
+    first, jobs = spark_jobs(lambda: load_table(spark, d, "events"))
     assert jobs >= 1  # schema inference reads a footer
-    second, jobs = _jobs(spark, lambda: load_table(spark, d, "events"))
+    second, jobs = spark_jobs(lambda: load_table(spark, d, "events"))
     assert jobs == 0
     assert second.schema == first.schema
     assert sorted(map(tuple, second.collect())) == sorted(map(tuple, first.collect()))
     assert _ts_ns(second) == want
 
 
-def test_rewritten_file_is_reinferred(spark, tmp_path):
+def test_rewritten_file_is_reinferred(spark, tmp_path, spark_jobs):
     d = _write_events(tmp_path, ENCODINGS["nanos"][0])
     assert _ts_ns(load_table(spark, d, "events")) == ENCODINGS["nanos"][1]
     _write_events(tmp_path, ENCODINGS["micros"][0])
-    df, jobs = _jobs(spark, lambda: load_table(spark, d, "events"))
+    df, jobs = spark_jobs(lambda: load_table(spark, d, "events"))
     assert jobs >= 1
     assert _ts_ns(df) == ENCODINGS["micros"][1]
 
 
-def test_directory_table_gaining_a_part_is_reinferred(spark, tmp_path):
+def test_directory_table_gaining_a_part_is_reinferred(spark, tmp_path, spark_jobs):
     table = tmp_path / "documents.parquet"
     table.mkdir()
 
@@ -140,15 +126,15 @@ def test_directory_table_gaining_a_part_is_reinferred(spark, tmp_path):
 
     add_part(0)
     load_table(spark, str(tmp_path), "documents")
-    _, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "documents"))
+    _, jobs = spark_jobs(lambda: load_table(spark, str(tmp_path), "documents"))
     assert jobs == 0
     add_part(1)
-    df, jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "documents"))
+    df, jobs = spark_jobs(lambda: load_table(spark, str(tmp_path), "documents"))
     assert jobs >= 1
     assert sorted(r["doc_id"] for r in df.collect()) == [0, 1]
 
 
-def test_warm_construction_jobs_budget(spark, sf_dir):
+def test_warm_construction_jobs_budget(spark, sf_dir, spark_jobs):
     """Plan construction on a warm schema cache: the schema jobs are
     gone, and only the eager materialize_once barriers remain."""
     from gomaxscale_spark.plans import all_queries
@@ -166,5 +152,37 @@ def test_warm_construction_jobs_budget(spark, sf_dir):
     load_table(spark, sf_dir, "documents")
     load_table(spark, sf_dir, "embeddings")
     for name, most in budget.items():
-        _, jobs = _jobs(spark, lambda: q[name].fn(spark, sf_dir))
+        _, jobs = spark_jobs(lambda: q[name].fn(spark, sf_dir))
         assert jobs <= most, (name, jobs, most)
+
+
+#: the ``llm_corpus`` benchmark mix: its warm passes recompiled ~176
+#: generated classes each while Spark's codegen cache held 100 entries
+LLM_CORPUS = [
+    "dedup_exact_documents", "dedup_minhash_lsh", "dedup_minhash_lsh_capped",
+    "dedup_simhash", "dedup_embedding_cosine", "similarity_cosine_topk",
+    "text_tfidf", "text_quality_score", "search_bm25_topk",
+    "sampling_dsir_weights", "text_gopher_rules",
+]
+
+
+def test_warm_mix_reuses_generated_classes(spark, sf_dir):
+    """A session from ``get_session`` keeps the mix's whole generated-code
+    working set: a second pass compiles almost nothing (~176 classes
+    with Spark's default 100-entry cache). Repeating one query back to
+    back would hit even the small cache; only cycling through the mix
+    shows eviction."""
+    from gomaxscale_spark.plans import all_queries
+    from gomaxscale_spark.session import codegen_compilations
+
+    q = all_queries()
+
+    def one_pass():
+        before = codegen_compilations(spark)
+        for name in LLM_CORPUS:
+            q[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return codegen_compilations(spark) - before
+
+    first = one_pass()
+    second = one_pass()
+    assert second <= 10, (first, second)

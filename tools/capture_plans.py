@@ -1,8 +1,10 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries into plans/r16/.
+"""Capture .explain("formatted") for named queries into plans/<dir>/.
 
 Usage: python tools/capture_plans.py <suffix> name [name ...]
-Writes plans/r16/<name>_<suffix>.txt (suffix: before/after).
+Writes plans/<dir>/<name>_<suffix>.txt (suffix: before/after), where
+<dir> is ``$SPARK_GRAFT_PLANS_DIR`` (default ``r17``); the tables are
+read from ``$SPARK_GRAFT_SF_DIR`` (default sf0.1).
 NOTE: for catalog fns that materialize eagerly inside fn(), the
 captured plan is the FINAL stage's plan (upstream stages appear as
 scans of checkpointed RDDs); that is the honest shape of what the

@@ -12,7 +12,14 @@ measure separately:
 - ``first_s``: first noop materialize (codegen compile + execution);
 - ``jobs``: Spark jobs launched by that first materialize;
 - ``best_s`` / ``median_s``: best/median of ``--runs`` further
-  materializes of a freshly constructed frame (steady-state cost).
+  materializes of a freshly constructed frame (steady-state cost);
+- ``construct_compiles`` / ``first_compiles`` / ``runs_compiles``:
+  generated classes compiled in each phase (the ``CodegenMetrics``
+  delta; ``runs_compiles`` sums all runs). Repeating one query back to
+  back finds its classes still in Spark's generated-code cache, so
+  only an interleaved mix (the perfbench ``llm_corpus`` workload) can
+  show one query evicting another's; that is why the r16/r17 probes,
+  one query at a time, never saw the default cache recompile.
 
 Usage: python tools/opt_probe.py [--sf DIR] [--runs N] [name ...]
 Writes JSON lines to stdout; meant for an IDLE host.
@@ -29,7 +36,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gomaxscale_spark.plans import all_queries
-from gomaxscale_spark.session import get_session
+from gomaxscale_spark.session import codegen_compilations, get_session
 
 
 def main() -> None:
@@ -69,14 +76,17 @@ def main() -> None:
 
     for name in names:
         q = registry[name]
+        compiles = [codegen_compilations(spark)]
         sc.setJobGroup(f"opt_probe:{name}:construct", name)
         t0 = time.perf_counter()
         df = q.fn(spark, sf_dir)
         construct_s = time.perf_counter() - t0
+        compiles.append(codegen_compilations(spark))
         sc.setJobGroup(f"opt_probe:{name}:first", name)
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         first_s = time.perf_counter() - t0
+        compiles.append(codegen_compilations(spark))
         sc.setJobGroup(f"opt_probe:{name}:runs", name)
         walls = []
         for _ in range(runs):
@@ -86,6 +96,7 @@ def main() -> None:
             # exactly what the bench times
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             walls.append(time.perf_counter() - t0)
+        compiles.append(codegen_compilations(spark))
         spark.catalog.clearCache()
         print(
             json.dumps(
@@ -93,10 +104,13 @@ def main() -> None:
                     "name": name,
                     "construct_s": round(construct_s, 3),
                     "construct_jobs": jobs_in(f"opt_probe:{name}:construct"),
+                    "construct_compiles": compiles[1] - compiles[0],
                     "first_s": round(first_s, 3),
                     "jobs": jobs_in(f"opt_probe:{name}:first"),
+                    "first_compiles": compiles[2] - compiles[1],
                     "best_s": round(min(walls), 3),
                     "median_s": round(statistics.median(walls), 3),
+                    "runs_compiles": compiles[3] - compiles[2],
                 }
             ),
             flush=True,
