@@ -856,9 +856,7 @@ def _verify_jaccard_tail(
     )
 
 
-def tokenized_corpus_artifact(
-    df: DataFrame, id_col: str, text_col: str, portable_hashes: bool = True
-) -> DataFrame:
+def tokenized_corpus_artifact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, __toks, __th60) materialized once — the candidates→verify
     compositions' shared corpus artifact (r16 optimization round,
     guide §2.3/§6; the operator-level twin of the release-gate
@@ -870,17 +868,12 @@ def tokenized_corpus_artifact(
     md5 pass over one corpus scan serves both stages — the raw-text
     composition paid each twice. Scale: the artifact is ~corpus-sized;
     on a cluster materialize with ``persist_disk``/``reliable`` (the
-    standard SPARK_GRAFT_MATERIALIZE knob).
-
-    ``portable_hashes=False`` drops the ``__th60`` column — for
-    consumers (the xxhash64-based prefix-filter family) that only need
-    the token arrays, so the artifact never pays an md5 pass nobody
-    reads."""
+    standard SPARK_GRAFT_MATERIALIZE knob). Consumers that need only
+    the token arrays (the xxhash64-based prefix-filter family) carry
+    ``__th60`` along unread."""
     base = parallelize_narrow_input(
         df.select(F.col(id_col), F.col(text_col))
     ).select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
-    if not portable_hashes:
-        return materialize_once(base)
     return materialize_once(
         base.select(
             F.col(id_col),
@@ -930,17 +923,16 @@ def minhash_verified_pairs(
     if tokd is None:
         tokd = tokenized_corpus_artifact(df, id_col, text_col)
     else:
-        # r16 ADVICE: an artifact built with portable_hashes=False (or
-        # any frame missing the columns this pipeline binds) used to
-        # fail much later with an opaque unresolved-column
-        # AnalysisException deep inside the signature subtree.
+        # r16 ADVICE: an injected frame missing the columns this
+        # pipeline binds used to fail much later with an opaque
+        # unresolved-column AnalysisException deep inside the signature
+        # subtree.
         missing = {"__toks", "__th60"} - set(tokd.columns)
         if missing:
             raise ValueError(
                 "minhash_verified_pairs: injected tokd is missing "
                 f"{sorted(missing)} — build it with "
-                "tokenized_corpus_artifact(df, id_col, text_col, "
-                "portable_hashes=True)"
+                "tokenized_corpus_artifact(df, id_col, text_col)"
             )
     sigs = portable_minhash_signatures_from_hashes(
         tokd, id_col, "__th60", num_hashes, shingle_n

@@ -244,7 +244,6 @@ class IVFIndex:
             n_iters=n_iters,
             id_col=self.id_col,
             vec_col=self.vec_col,
-            kernel="numpy",
         )
         cents.coalesce(1).write.mode("overwrite").parquet(f"{self.path}/centroids")
         self.invalidate_cache()

@@ -11,9 +11,12 @@ Two paths, per the standard ANN playbook:
   scan per query into a bucket-pruned scan; signatures are computable
   at ingest and usable as a partition/cluster key.
 
-All arithmetic is JVM-side (`zip_with` + `aggregate` higher-order
-functions, whole-stage codegen) — no Python in the hot path. Element
-order of the fold is the array order, so results are bit-reproducible.
+Single-query scoring is JVM-side (`zip_with` + `aggregate` higher-order
+functions, whole-stage codegen); element order of the fold is the
+array order, so results are bit-reproducible. Stages that fan a row
+out against many vectors — the adaptive LSH verify, IVF and k-means
+assignment — run ONE exact-cosine path, the Arrow-batched kernels of
+``vector_kernel``.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from . import vector_kernel as VK
 from .bucketing import bucket_pairs, parallelize_narrow_input
 from .materialize import materialize_once
 
@@ -297,7 +301,6 @@ def lsh_near_duplicates_adaptive(
     seed: int = 42,
     target_bucket: int = 64,
     wide_sigs: DataFrame | None = None,
-    kernel: str = "hof",
 ) -> DataFrame:
     """``lsh_near_duplicates`` with an ADAPTIVE signature width — the
     fix for the fixed-2⁸-bucket blocker the 30× replica study exposed
@@ -331,10 +334,13 @@ def lsh_near_duplicates_adaptive(
     asserted structurally here (column presence), contract-documented
     for the seed (not recoverable from the frame itself).
 
-    ``kernel="numpy"`` swaps the exact-cosine verify of the candidate
-    pairs from the interpreted HOF fold (~3 µs/64-dim pair) to the
-    Arrow-batched numpy kernel (vector_kernel.cosine_pairs) — same
-    raw-threshold predicate, same 6dp projection.
+    The exact-cosine VERIFY of the candidate pairs is the Arrow-batched
+    kernel (vector_kernel.cosine_pairs) thresholded on the 6dp-rounded
+    score. A zero-norm vector scores NULL (0/0) against anything, so
+    its pairs are dropped — the oracle's ``round(0/0, 6) >= t`` is NULL
+    as well. The streaming embedding lake verifies with the same
+    kernel, so a one-batch stream equals this operator by
+    construction.
 
     The SIGNATURE stage is the Arrow matmul+pack kernel
     (vector_kernel.sign_band_signatures, via ``wide_band_signatures``):
@@ -345,21 +351,16 @@ def lsh_near_duplicates_adaptive(
     equality test against ``lsh_signature_sql`` and the oracle replay
     at both SFs.
     """
-    # materialize the (vid, vec, nrm) frame once (r17 optimization
-    # round, guide §2.4): the signature stage and BOTH verify sides
-    # consumed it with different projections, so the embeddings scan +
-    # the HOF norm fold ran up to three times per invocation (plus a
-    # fourth pruned scan for the corpus count, now read off the same
-    # artifact). One scan, one norm pass, candidates and verify both
-    # read the checkpoint.
-    with_norm = materialize_once(
-        embeddings.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            norm(F.col(vec_col)).alias("nrm"),
-        )
+    # materialize the (vid, vec) frame once (r17 optimization round,
+    # guide §2.4): the signature stage and BOTH verify sides consume it
+    # with different projections, so without the checkpoint the
+    # embeddings scan ran up to three times per invocation (plus a
+    # fourth pruned scan for the corpus count, read off the same
+    # artifact). One scan; candidates and verify both read it.
+    with_vec = materialize_once(
+        embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
     )
-    nn = with_norm.agg(F.count(F.lit(1)).alias("__n"))
+    nn = with_vec.agg(F.count(F.lit(1)).alias("__n"))
     if wide_sigs is not None:
         expected = [id_col] + [f"s{b}" for b in range(n_bands)]
         missing = [c for c in expected if c not in wide_sigs.columns]
@@ -375,7 +376,7 @@ def lsh_near_duplicates_adaptive(
         )
     else:
         sig_src = wide_band_signatures(
-            with_norm, dim, "vid", "vec", planes_per_band, n_bands, seed
+            with_vec, dim, "vid", "vec", planes_per_band, n_bands, seed
         )
     sigs = (
         sig_src
@@ -401,32 +402,19 @@ def lsh_near_duplicates_adaptive(
     # ~target_bucket; it does not bound the worst case — zero or
     # constant vectors share one bucket, and this expansion is uncapped
     cand = bucket_pairs(stacked, ["band", "bucket"], "vid")
-    va = with_norm.select(
-        F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("norm_a")
-    )
-    vb = with_norm.select(
-        F.col("vid").alias("id_b"), F.col("vec").alias("vec_b"), F.col("nrm").alias("norm_b")
-    )
-    if kernel == "numpy":
-        from . import vector_kernel as VK
-
-        raw = VK.cosine_pairs(F.col("vec_a"), F.col("vec_b"))
-    elif kernel == "hof":
-        raw = dot(F.col("vec_a"), F.col("vec_b")) / (F.col("norm_a") * F.col("norm_b"))
-    else:
-        raise ValueError(f"lsh_near_duplicates_adaptive: unknown kernel {kernel!r}")
-    # threshold on the 6dp-ROUNDED score (ADVICE r9): this operator is
-    # kernel-switchable, and numpy's pairwise summation differs from
-    # the HOF/DuckDB fold in the last ulps — a raw-score threshold
-    # would let boundary pairs flip kept/dropped with the kernel. The
-    # 6dp contract makes the predicate kernel-stable; the oracle
-    # applies the identical round-then-compare. (The hof-only
-    # operators keep the raw threshold: their fold is bit-identical
-    # to the oracle's, the r4 decision.)
+    va = with_vec.select(F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"))
+    vb = with_vec.select(F.col("vid").alias("id_b"), F.col("vec").alias("vec_b"))
+    # threshold on the 6dp-ROUNDED score (ADVICE r9): numpy's pairwise
+    # summation differs from DuckDB's sequential fold in the last ulps,
+    # so a raw-score threshold would let boundary pairs flip
+    # kept/dropped between engine and oracle; the oracle applies the
+    # identical round-then-compare. (The HOF operators keep the raw
+    # threshold: their fold is bit-identical to the oracle's, the r4
+    # decision.)
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("__score", F.round(raw, 6))
+        .withColumn("__score", F.round(VK.cosine_pairs(F.col("vec_a"), F.col("vec_b")), 6))
         .filter(F.col("__score") >= threshold)
         .select("id_a", "id_b", F.col("__score").alias("score"))
     )
@@ -455,8 +443,6 @@ def wide_band_signatures(
     last-ulp noise). A signature STORE must be read and written under
     ONE kernel — mixing kernels across epochs is the same contract
     violation as mixing plane seeds."""
-    from . import vector_kernel as VK
-
     all_planes = hyperplanes(dim, n_bands * planes_per_band, seed)
     sigk = VK.sign_band_signatures(all_planes, planes_per_band, n_bands)
     return embeddings.select(
@@ -656,8 +642,6 @@ def lsh_bucket_topk_adaptive(
     # Signatures: the same Arrow matmul+pack kernel as the dedup side
     # (packed values identical to the sign fold, SCALING.md r12) — one
     # 16-bit band
-    from . import vector_kernel as VK
-
     sigk = VK.sign_band_signatures(planes, max_planes, 1)
     with_sig = embeddings.withColumn("__sig", sigk(F.col(vec_col))["s0"])
     bucketed = (
@@ -689,7 +673,6 @@ def ivf_topk_adaptive(
     vec_col: str = "embedding",
     min_bits: int = 2,
     max_bits: int = 16,
-    kernel: str = "hof",
 ) -> DataFrame:
     """``ivf_topk`` with an ADAPTIVE centroid count — the other fixed-
     width serving op named by the r7 scale audit (fixed
@@ -697,125 +680,56 @@ def ivf_topk_adaptive(
     per-probe scan cost grows linearly; the one measured x10 point had
     the assignment scan dominating wall). Centroids are the rows with
     ``id % stride == 0`` where ``stride`` = smallest 2^w with
-    (2^w)² ≥ N, derived IN-PLAN from the corpus count — i.e.
-    n_centroids ≈ √N, the balanced IVF sizing (ranking centroids ~√N
-    dots; each probed list ~√N vectors). A plain modulus sample needs
-    no global sort or row_number (the fixed twin's rank-sample is a
-    single-partition window at scale) and no driver round-trip; the
+    (2^w)² ≥ N — i.e. n_centroids ≈ √N, the balanced IVF sizing
+    (ranking centroids ~√N dots; each probed list ~√N vectors). A
+    plain modulus sample needs no global sort or row_number (the fixed
+    twin's rank-sample is a single-partition window at scale); the
     centroid id IS the vector id, so tie-breaks replay portably.
     Production still k-meanses the centroids at ingest
     (kmeans_centroid_vectors / ivf_kmeans_topk); the modulus sample is
     the deterministic stand-in with identical plumbing.
 
-    The argmax assignment is a partial-aggregable groupBy-max over a
-    (score, -centroid_id) struct — one exchange of N pre-combined
-    rows — instead of the fixed twin's row_number window, which
-    shuffles all N×n_centroids scored rows. Assignment remains the
-    ingest-time cost; the per-query path is centroid ranking + the
-    probed lists.
+    What runs: an eager ``count()`` sizes the stride and the sampled
+    centroid matrix is collected driver-side (O(√N·dim) — the standard
+    IVF coarse-quantizer artifact, ~8 MB at 10⁹ 64-dim vectors); the
+    probe cells are ranked on the driver, and assignment is ONE
+    Arrow-batched ``assign_nearest`` map that also carries each
+    vector's query score — no N×√N row expansion, no assignment
+    exchange. Ties go to the lowest centroid id, as in the oracle's
+    replay of count → stride → sample → assign → probe. The kernel
+    priced the x100 assignment at 2.74 s against 63.1 s for the
+    interpreted fold it replaced (SCALING.md r10)."""
+    import numpy as np
 
-    ``kernel="numpy"`` (the r9 escalation of the measured dominant
-    scale cost — the interpreted HOF cosine at ~3 µs/pair priced the
-    N×√N assignment at 55 s for 200k×391 on 32 cores, SCALING.md r8)
-    replaces the broadcast-join fan-out + struct-max re-aggregation
-    with ONE Arrow-batched ``assign_nearest`` pandas_udf: the centroid
-    matrix is collected driver-side (O(√N·dim) — the standard IVF
-    coarse-quantizer artifact, ~8 MB at 10⁹ 64-dim vectors) and each
-    vector batch is scored by a single numpy matmul, so assignment
-    becomes a pure MAP — no N×√N row expansion, no assignment
-    exchange at all. Same argmax tie-break (lowest centroid id),
-    same 6dp-rounded query score; oracle parity measured at
-    sf0.001 + sf0.01 before the catalog entry switched kernels."""
-    from .bucketing import parallelize_narrow_input
-
-    if kernel == "numpy":
-        from . import vector_kernel as VK
-
-        n = embeddings.count()
-        stride = VK.adaptive_sqrt_pow2(n, min_bits, max_bits)
-        cent_ids, M = VK.collect_matrix(
-            embeddings.filter((F.col(id_col) % stride) == 0), id_col, vec_col
-        )
-        import numpy as np
-
-        qv = np.asarray(list(query_vec), dtype=np.float64)
-        cs = (M @ qv) / (
-            np.sqrt(np.einsum("ij,ij->i", M, M)) * float(np.sqrt((qv * qv).sum()))
-        )
-        # top-n_probe centroids by (cosine desc, centroid_id asc),
-        # ranked on the 6dp-ROUNDED score (the output contract's own
-        # granularity — ADVICE r9): a last-ulp kernel divergence near
-        # a tie then cannot flip cell selection between the numpy,
-        # HOF, and oracle paths, because all three rank rounded and
-        # break the tie on centroid_id. Two residual caveats (ADVICE
-        # r10): np.round is half-to-even while F.round/DuckDB round
-        # half-away-from-zero, so an EXACT .5-at-6dp cosine would
-        # still rank differently — unreachable in practice for
-        # double-valued cosines but not excluded by construction; and
-        # parity below the 6th decimal (the argmax ASSIGNMENT)
-        # remains empirical — gated by the collected-row equality
-        # tests at both oracle scales, not by construction.
-        order = np.lexsort((np.asarray(cent_ids), -np.round(cs, 6)))
-        probe_ids = [int(cent_ids[i]) for i in order[:n_probe]]
-        assign = VK.assign_nearest(cent_ids, M, query_vec=query_vec)
-        assigned = parallelize_narrow_input(embeddings).select(
-            F.col(id_col), assign(F.col(vec_col)).alias("__a")
-        )
-        return (
-            assigned.filter(F.col("__a.centroid_id").isin(probe_ids))
-            .select(F.col(id_col), F.round(F.col("__a.qscore"), 6).alias("score"))
-            .orderBy(F.desc("score"), F.col(id_col))
-            .limit(k)
-        )
-    if kernel != "hof":
-        raise ValueError(f"ivf_topk_adaptive: unknown kernel {kernel!r}")
-
-    q = lit_vec(query_vec)
-    nn = embeddings.agg(F.count(F.lit(1)).alias("__n"))
-    stride = F.expr(adaptive_sqrt_pow2_case_sql("__n", min_bits, max_bits))
-    centroids = (
-        embeddings.crossJoin(F.broadcast(nn))
-        .filter((F.col(id_col) % stride) == 0)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec"))
+    n = embeddings.count()
+    stride = VK.adaptive_sqrt_pow2(n, min_bits, max_bits)
+    cent_ids, M = VK.collect_matrix(
+        embeddings.filter((F.col(id_col) % stride) == 0), id_col, vec_col
     )
-    # probe-cell ranking on the 6dp-ROUNDED score (same contract as
-    # the numpy path and the oracle — ADVICE r9: near-tie cells must
-    # not flip with the kernel's last-ulp arithmetic)
-    probe = (
-        centroids.select(
-            "centroid_id", F.round(cosine(F.col("centroid_vec"), q), 6).alias("s")
-        )
-        .orderBy(F.desc("s"), F.col("centroid_id"))
-        .limit(n_probe)
-        .select("centroid_id")
+    qv = np.asarray(list(query_vec), dtype=np.float64)
+    cs = (M @ qv) / (
+        np.sqrt(np.einsum("ij,ij->i", M, M)) * float(np.sqrt((qv * qv).sum()))
     )
-    # the N×n_centroids assignment fan-out after the broadcast join is
-    # the heavy stage; a single-row-group input would run it as ONE
-    # task (measured 219 s vs 12 s across 32 ways at the x30 replica —
-    # SCALING.md r8). The guard keeps this a no-op on partitioned
-    # lake inputs; the shuffle moves pre-expansion rows only.
-    assigned = (
-        parallelize_narrow_input(embeddings).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.round(cosine(F.col(vec_col), q), 6).alias("__qscore"),
-        )
-        .join(F.broadcast(centroids))
-        .groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    cosine(F.col(vec_col), F.col("centroid_vec")).alias("s"),
-                    (-F.col("centroid_id")).alias("neg_cid"),
-                )
-            ).alias("m"),
-            F.max("__qscore").alias("score"),  # constant per id
-        )
-        .select(id_col, (-F.col("m.neg_cid")).alias("centroid_id"), "score")
+    # top-n_probe centroids by (cosine desc, centroid_id asc), ranked
+    # on the 6dp-ROUNDED score (the output contract's own granularity —
+    # ADVICE r9): a last-ulp divergence from the oracle's fold near a
+    # tie then cannot flip cell selection, because both rank rounded
+    # and break the tie on centroid_id. Two residual caveats (ADVICE
+    # r10): np.round is half-to-even while DuckDB rounds
+    # half-away-from-zero, so an EXACT .5-at-6dp cosine would still
+    # rank differently — unreachable in practice for double-valued
+    # cosines but not excluded by construction; and parity below the
+    # 6th decimal (the argmax ASSIGNMENT) remains empirical — gated by
+    # the oracle replay at both scales, not by construction.
+    order = np.lexsort((np.asarray(cent_ids), -np.round(cs, 6)))
+    probe_ids = [int(cent_ids[i]) for i in order[:n_probe]]
+    assign = VK.assign_nearest(cent_ids, M, query_vec=query_vec)
+    assigned = parallelize_narrow_input(embeddings).select(
+        F.col(id_col), assign(F.col(vec_col)).alias("__a")
     )
     return (
-        assigned.join(F.broadcast(probe), "centroid_id")
-        .select(F.col(id_col), F.col("score"))
+        assigned.filter(F.col("__a.centroid_id").isin(probe_ids))
+        .select(F.col(id_col), F.round(F.col("__a.qscore"), 6).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
@@ -827,7 +741,6 @@ def kmeans_centroid_vectors(
     n_iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "hof",
 ) -> DataFrame:
     """``kmeans_refine``'s loop returning assembled (centroid_id,
     centroid_vec) rows — the coarse-quantizer table consumers broadcast.
@@ -838,17 +751,14 @@ def kmeans_centroid_vectors(
     assignments must not hinge on it. 1e-6 centroid precision is
     immaterial to clustering quality.
 
-    ``kernel="numpy"``: the per-iteration assignment (the N×k fan-out
-    join + row_number window — the 2.5→11.6 s-at-x10 stage the r7
-    audit measured) runs instead as ONE Arrow-batched
-    ``assign_nearest`` pandas_udf against the driver-collected k·dim
-    centroid matrix (MLlib's own Lloyd's layout: centroids driver-side
-    per iteration, assignment a pure map). The per-dimension mean
-    UPDATE stays in-plan (partial-aggregable posexplode groupBy).
-    Same tie-break (lowest centroid id), same 6dp mean rounding.
+    Each iteration collects the k·dim centroid matrix driver-side and
+    assigns with ONE Arrow-batched ``assign_nearest`` map (MLlib's own
+    Lloyd's layout: centroids driver-side per iteration, assignment a
+    pure map — 1.34 s at x100 against 41.3 s for the broadcast-join +
+    row_number form it replaced, SCALING.md r10). The per-dimension
+    mean UPDATE stays in-plan (partial-aggregable posexplode groupBy).
+    Ties go to the lowest centroid id.
     """
-    if kernel not in ("hof", "numpy"):
-        raise ValueError(f"kmeans_centroid_vectors: unknown kernel {kernel!r}")
     centroids = (
         embeddings.orderBy(id_col)
         .limit(n_centroids)
@@ -858,28 +768,12 @@ def kmeans_centroid_vectors(
         )
     )
     for _ in range(n_iters):
-        if kernel == "numpy":
-            from . import vector_kernel as VK
-
-            cent_ids, M = VK.collect_matrix(centroids, "centroid_id", "centroid_vec")
-            assign = VK.assign_nearest(cent_ids, M)
-            assigned = embeddings.select(
-                assign(F.col(vec_col))["centroid_id"].alias("centroid_id"),
-                F.col(vec_col),
-            )
-        else:
-            assigned = (
-                embeddings.join(F.broadcast(centroids))
-                .withColumn("s", cosine(F.col(vec_col), F.col("centroid_vec")))
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        W.partitionBy(id_col).orderBy(F.desc("s"), F.col("centroid_id"))
-                    ),
-                )
-                .filter(F.col("rn") == 1)
-                .select("centroid_id", vec_col)
-            )
+        cent_ids, M = VK.collect_matrix(centroids, "centroid_id", "centroid_vec")
+        assign = VK.assign_nearest(cent_ids, M)
+        assigned = embeddings.select(
+            assign(F.col(vec_col))["centroid_id"].alias("centroid_id"),
+            F.col(vec_col),
+        )
         means = (
             assigned.select(
                 "centroid_id", F.posexplode(F.col(vec_col)).alias("dim_idx", "val")
@@ -887,7 +781,7 @@ def kmeans_centroid_vectors(
             .groupBy("centroid_id", "dim_idx")
             .agg(F.round(F.avg(F.col("val").cast("double")), 6).alias("centroid"))
         )
-        # re-assemble vectors for the next round's broadcast (k·dim rows)
+        # re-assemble vectors for the next round's collect (k·dim rows)
         centroids = (
             means.groupBy("centroid_id")
             .agg(
@@ -909,7 +803,6 @@ def kmeans_refine(
     n_iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "hof",
 ) -> DataFrame:
     """Lloyd's k-means refinement of the IVF coarse quantizer:
     deterministic seed (first `n_centroids` vectors by id), then
@@ -922,8 +815,8 @@ def kmeans_refine(
     This is the production upgrade of ``ivf_topk``'s id-ordered sample
     noted there: better-balanced inverted lists → flatter probe fan-out.
 
-    Scale per iteration: centroid table is O(k·dim) → broadcast;
-    assignment is a map over the corpus; the update shuffles (centroid,
+    Scale per iteration: centroid table is O(k·dim) → collected once
+    and shipped with the assignment map over the corpus; the update shuffles (centroid,
     dim, partial sum) — map-side combine collapses per partition, so
     the exchange is O(k·dim·partitions), independent of corpus size.
     A cluster that captures nothing would drop out — impossible with
@@ -932,7 +825,7 @@ def kmeans_refine(
     Deterministic at fixed n_iters → oracle-expressible by unrolling.
     """
     return kmeans_centroid_vectors(
-        embeddings, n_centroids, n_iters, id_col, vec_col, kernel=kernel
+        embeddings, n_centroids, n_iters, id_col, vec_col
     ).select("centroid_id", F.posexplode("centroid_vec").alias("dim_idx", "centroid"))
 
 
@@ -1007,8 +900,6 @@ def semantic_dedup(
     pathological mega-cluster is handled like any hot dedup band:
     count-first caps (see dedup_minhash_lsh_capped).
     """
-    from . import vector_kernel as VK
-
     seeds = (
         embeddings.orderBy(id_col)
         .limit(n_clusters)
@@ -1103,8 +994,6 @@ def benchmark_decontaminate_embeddings(
     ``assign_nearest`` pass over the corpus; no join, no N×B fan-out
     rows, no shuffle at all. The corpus is touched exactly once.
     """
-    from . import vector_kernel as VK
-
     bench = embeddings.filter((F.col(id_col) % bench_mod) == 0).select(
         F.col(id_col), F.col(vec_col)
     )
@@ -1148,8 +1037,6 @@ def cluster_label_purity(
     task-local); the only exchange carries (cluster_id, label) int
     pairs; the rank/total windows run on the ≤k·|labels| agg output.
     """
-    from . import vector_kernel as VK
-
     seeds = (
         embeddings.orderBy(id_col)
         .limit(n_clusters)

@@ -14,14 +14,16 @@ floor, and the N×k assignment needs **no row expansion at all** (the
 candidate matrix rides task-local, closed over the UDF, so the plan
 is a pure map instead of a broadcast-join fan-out + re-aggregation).
 
-Numerical contract: numpy's SIMD/pairwise summation differs from the
-sequential HOF fold (and from DuckDB's fold) only in the last ulps
-(~1e-15 on unit-scale cosines). Every consumer either rounds to 6
-decimals before anything the oracle compares, or thresholds the raw
-score exactly where the HOF path did the same — so the cross-engine
-risk profile is unchanged, and catalog entries switch kernels only
-behind measured oracle parity at sf0.001 + sf0.01
-(tests/test_vector_kernel.py + the full-catalog replay).
+These are the ONE exact-cosine path of every fan-out stage (the
+adaptive LSH verify, IVF/k-means assignment, cluster-balanced sampling
+and the streaming embedding lake); the interpreted fold stays only for
+single-query scoring. Numerical contract: numpy's SIMD/pairwise
+summation differs from the sequential fold (and from DuckDB's) only in
+the last ulps (~1e-15 on unit-scale cosines), and every consumer rounds
+to 6 decimals before anything the oracle compares or thresholds —
+gated by the full-catalog oracle replay at sf0.001 + sf0.01. A
+zero-norm vector scores NaN, which reaches Spark as NULL, the same
+value DuckDB gives 0/0.
 
 Null/shape contract: callers feed non-null, equal-dimension vectors
 (every call site scores join outputs or scans of the embeddings
@@ -55,7 +57,8 @@ def cosine_pairs(a: Column, b: Column) -> Column:
     (two vector columns side by side after a join).
 
     Exactly the HOF formula per row: Σaᵢbᵢ / (‖a‖·‖b‖), float64
-    accumulation; a zero-norm side yields NaN on both kernels.
+    accumulation; a zero-norm side yields NaN, which Arrow hands to
+    Spark as NULL (the HOF fold raises DIVIDE_BY_ZERO under ANSI).
     """
 
     @pandas_udf("double")
@@ -146,7 +149,7 @@ def assign_nearest(
     task-local (serialized once with the UDF, O(√N·dim) — the standard
     driver-side coarse-quantizer artifact, ~8 MB at 10⁹ vectors).
 
-    Tie-break parity with the HOF path's ``max(struct(s, -cid))``:
+    Tie-break parity with the oracle's ``ORDER BY s DESC, cid``:
     ``centroid_ids`` MUST be ascending — the argmax returns the
     first maximal column, i.e. the lowest centroid id.
 

@@ -583,7 +583,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.3/§6): the raw-text composition tokenized the corpus
     # once per stage — the verify leg's parquet re-scan + re-tokenize
     # was the entry's last redundant corpus pass.
-    tokd = D.tokenized_corpus_artifact(d, "doc_id", "text", portable_hashes=False)
+    tokd = D.tokenized_corpus_artifact(d, "doc_id", "text")
     rows = materialize_once(
         D.shingle_hash_rows_from_tokens(tokd, "doc_id", "__toks", 2)
     )
@@ -1338,22 +1338,21 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Centroids are the id % stride == 0 rows with stride = smallest "
     "2^w where (2^w)² ≥ count(*) — i.e. ~√N centroids, the balanced "
     "IVF sizing (ranking ~√N dots; probed lists ~√N vectors) — "
-    "derived in-plan, no global sort, no driver round-trip. The "
-    "argmax assignment is a partial-aggregable struct-max groupBy "
-    "(one exchange of N combined rows) instead of the fixed twin's "
-    "row_number window over all N×n_centroids scored rows. The "
+    "no global sort. What runs: an eager count() plus a collect of "
+    "the ~√N sampled centroids, then ONE Arrow assign_nearest map "
+    "that assigns every vector and scores it against the query — no "
+    "N×n_centroids fan-out, no assignment exchange (2.74 s against "
+    "63.1 s for the broadcast-join form at x100, SCALING.md r10). The "
     "oracle replays count → stride → sample → assign → probe with "
     "the same integer boundaries and tie-breaks.",
 )
 def similarity_ivf_topk_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    # kernel="numpy" (r9): the Arrow-batched matmul assignment — row-
-    # identical to the HOF fold at x10/x30/x100 (parity gate in
-    # tools/scale_vector_kernel.py) and 24× faster at x100 (58.9 →
-    # 2.47 s, SCALING.md r9)
-    return S.ivf_topk_adaptive(
-        e, _query_vector(spark, sf_dir), k=10, n_probe=4, kernel="numpy"
-    )
+    # the Arrow-batched matmul assignment was row-identical to the
+    # interpreted fold at x10/x30/x100 and 24× faster at x100 (58.9 →
+    # 2.47 s, SCALING.md r9; parity gate in
+    # `git show b8116fd:tools/scale_vector_kernel.py`)
+    return S.ivf_topk_adaptive(e, _query_vector(spark, sf_dir), k=10, n_probe=4)
 
 
 @query(
@@ -1929,10 +1928,9 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
-    # kernel="numpy" (r9): per-iteration assignment via the batched
-    # matmul kernel — row-identical at x10/x30/x100, 37× at x100
-    # (38.9 → 1.05 s, SCALING.md r9)
-    refined = S.kmeans_refine(e, n_centroids=16, n_iters=1, kernel="numpy")
+    # per-iteration assignment via the batched matmul kernel — row-
+    # identical at x10/x30/x100, 37× at x100 (38.9 → 1.05 s, SCALING.md r9)
+    refined = S.kmeans_refine(e, n_centroids=16, n_iters=1)
     return refined.select(
         "centroid_id", "dim_idx", F.round(F.col("centroid"), 6).alias("centroid")
     )
@@ -2793,8 +2791,9 @@ def similarity_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     e = t(spark, sf_dir, "embeddings")
-    # kernel="numpy" (r9): see SCALING.md r9 kernel A/B (parity-gated)
-    cents = S.kmeans_centroid_vectors(e, n_centroids=16, n_iters=1, kernel="numpy")
+    # assignment kernel A/B: SCALING.md r9 (parity-gated, measured with
+    # `git show b8116fd:tools/scale_vector_kernel.py`)
+    cents = S.kmeans_centroid_vectors(e, n_centroids=16, n_iters=1)
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     probe = (
         cents.crossJoin(F.broadcast(q))
@@ -3204,72 +3203,39 @@ def dq_embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sampling_domain_cap: a quota per semantic region instead of per "
     "crawl domain, so one dominant content cluster cannot monopolize "
     "the training mix (SemDeDup-adjacent prototype selection). Scale: "
-    "assignment is ONE Arrow-batched assign_nearest map (the r9 "
-    "kernel — no N×16 fan-out rows, no per-vector window; the HOF "
-    "broadcast-join twin rides as kernel='hof', equality pytested); "
+    "an eager collect of the 16 seed centroids, then ONE Arrow-batched "
+    "assign_nearest map that assigns and scores every vector (no "
+    "N×16 fan-out rows, no per-vector window); "
     "the quota window shuffles (id, cluster, rounded score) only — "
     "vectors ride no exchange (plan-pinned) — and a pathologically "
     "hot cluster follows the domain_cap_salted two-phase escalation. "
     "Quota ranks on the 6dp-ROUNDED score (the output contract's own "
-    "granularity, tie→vec_id) so a last-ulp kernel divergence cannot "
-    "flip membership — the ivf_topk_scaled rounding contract. Output "
+    "granularity, tie→vec_id) so a last-ulp divergence from the "
+    "oracle's fold cannot flip membership — the ivf_topk_scaled "
+    "rounding contract. Output "
     "≤ 16×20 rows at any corpus size. Oracle replays sample → assign "
     "→ rank with identical tie-breaks.",
 )
 def sampling_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cluster_balanced(spark, sf_dir, kernel="numpy")
-
-
-def _cluster_balanced(
-    spark: SparkSession, sf_dir: str, kernel: str = "numpy"
-) -> DataFrame:
+    import numpy as np
     from pyspark.sql import Window as W
 
+    from ..operators import vector_kernel as VK
+    from ..operators.bucketing import parallelize_narrow_input
+
     e = t(spark, sf_dir, "embeddings")
-    if kernel == "numpy":
-        import numpy as np
-
-        from ..operators import vector_kernel as VK
-        from ..operators.bucketing import parallelize_narrow_input
-
-        crows = e.orderBy("vec_id").limit(16).select("embedding").collect()
-        M = np.array([list(r.embedding) for r in crows], dtype=np.float64)
-        assign = VK.assign_nearest(list(range(1, len(M) + 1)), M, with_score=True)
-        assigned = (
-            parallelize_narrow_input(e.select("vec_id", "embedding"))
-            .select("vec_id", assign(F.col("embedding")).alias("__a"))
-            .select(
-                "vec_id",
-                F.col("__a.centroid_id").alias("cluster_id"),
-                F.round(F.col("__a.score"), 6).alias("ps"),
-            )
-        )
-    elif kernel == "hof":
-        centroids = (
-            e.orderBy("vec_id")
-            .limit(16)
-            .select(
-                F.row_number().over(W.orderBy("vec_id")).alias("cluster_id"),
-                F.col("embedding").alias("cvec"),
-            )
-        )
-        scored = e.join(F.broadcast(centroids)).select(
+    crows = e.orderBy("vec_id").limit(16).select("embedding").collect()
+    M = np.array([list(r.embedding) for r in crows], dtype=np.float64)
+    assign = VK.assign_nearest(list(range(1, len(M) + 1)), M, with_score=True)
+    assigned = (
+        parallelize_narrow_input(e.select("vec_id", "embedding"))
+        .select("vec_id", assign(F.col("embedding")).alias("__a"))
+        .select(
             "vec_id",
-            "cluster_id",
-            S.cosine(F.col("embedding"), F.col("cvec")).alias("s"),
+            F.col("__a.centroid_id").alias("cluster_id"),
+            F.round(F.col("__a.score"), 6).alias("ps"),
         )
-        assigned = (
-            scored.withColumn(
-                "rn",
-                F.row_number().over(
-                    W.partitionBy("vec_id").orderBy(F.desc("s"), "cluster_id")
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cluster_id", F.round("s", 6).alias("ps"))
-        )
-    else:
-        raise ValueError(f"_cluster_balanced: unknown kernel {kernel!r}")
+    )
     return (
         assigned.withColumn(
             "rnk",

@@ -67,6 +67,7 @@ import shutil
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators import vector_kernel as VK
 from ..operators.bucketing import split_hot_keys
 from .epoch import EpochCommit
 
@@ -87,7 +88,6 @@ class IncrementalEmbeddingIndexSink:
         n_bands: int = 4,
         target_bucket: int = 64,
         max_bucket_size: int | None = None,
-        kernel: str = "numpy",
         compact_every: int | None = None,
     ) -> None:
         self.path = path
@@ -98,17 +98,6 @@ class IncrementalEmbeddingIndexSink:
         self.planes_per_band = planes_per_band
         self.n_bands = n_bands
         self.target_bucket = target_bucket
-        #: exact-cosine kernel for the verify join and the topk re-rank:
-        #: "numpy" (default — Arrow-batched matmul, vector_kernel.py; the
-        #: interpreted HOF fold measured ~3 µs/64-dim pair and priced
-        #: every verify stage, SCALING.md r8) or "hof" (the portable
-        #: in-plan expression). Verify thresholds the 6dp-ROUNDED score
-        #: on both kernels (r10 — ADVICE r9: the kernels agree at 6dp
-        #: but not in the last ulps, so rounding makes kept/dropped
-        #: decisions kernel-stable for existing lakes).
-        if kernel not in ("numpy", "hof"):
-            raise ValueError(f"IncrementalEmbeddingIndexSink: unknown kernel {kernel!r}")
-        self.kernel = kernel
         #: 100 TB control loop (the text lake's cap, transplanted): the
         #: adaptive mask keeps EXPECTED bucket occupancy ~target_bucket,
         #: but a pathological sign region (near-zero vectors, constant
@@ -324,18 +313,10 @@ class IncrementalEmbeddingIndexSink:
                     vb = batch.select(
                         F.col(id_c).alias("id_b"), F.col(vec).alias("vec_b")
                     )
-                    if self.kernel == "numpy":
-                        from ..operators import vector_kernel as VK
-
-                        verify = VK.cosine_pairs(F.col("vec_a"), F.col("vec_b"))
-                    else:
-                        verify = S.cosine(F.col("vec_a"), F.col("vec_b"))
-                    # 6dp-rounded threshold — the kernel-stable contract
-                    # (ADVICE r9: numpy vs HOF differ in the last ulps,
-                    # so a raw threshold could flip boundary pairs
-                    # kept/dropped for EXISTING lakes when the kernel
-                    # knob changes); same predicate as the within-batch
-                    # operator, so batch ≡ stream holds on both kernels
+                    verify = VK.cosine_pairs(F.col("vec_a"), F.col("vec_b"))
+                    # 6dp-rounded threshold: the same kernel and predicate
+                    # as the within-batch operator, so a zero-norm vector
+                    # (NULL score) matches nothing on either leg
                     matched = (
                         cross.join(va, "id_a")
                         .join(F.broadcast(vb), "id_b")
@@ -357,7 +338,6 @@ class IncrementalEmbeddingIndexSink:
                     id_col=id_c,
                     vec_col=vec,
                     target_bucket=self.target_bucket,
-                    kernel=self.kernel,
                     # superset of the filtered batch's ids is fine: the
                     # verify join is inner on the filtered vectors, so
                     # pairs touching cross-batch-dropped ids vanish
@@ -488,12 +468,7 @@ class IncrementalEmbeddingIndexSink:
             .select(id_c)
             .distinct()
         )
-        if self.kernel == "numpy":
-            from ..operators import vector_kernel as VK
-
-            score = VK.cosine_vs_query([float(x) for x in query_vec])(F.col(vec))
-        else:
-            score = S.cosine(F.col(vec), S.lit_vec([float(x) for x in query_vec]))
+        score = VK.cosine_vs_query([float(x) for x in query_vec])(F.col(vec))
         return (
             kept.join(F.broadcast(cand_ids), id_c, "semi")
             .select(F.col(id_c), F.round(score, 6).alias("score"))
@@ -603,12 +578,7 @@ class IncrementalEmbeddingIndexSink:
             .join(F.broadcast(cand), F.col(id_c) == F.col("cand_id"))
             .join(F.broadcast(qvecs), query_id_col)
         )
-        if self.kernel == "numpy":
-            from ..operators import vector_kernel as VK
-
-            score = VK.cosine_pairs(F.col(vec), F.col("__qvec"))
-        else:
-            score = S.cosine(F.col(vec), F.col("__qvec"))
+        score = VK.cosine_pairs(F.col(vec), F.col("__qvec"))
         from pyspark.sql import Window as W
 
         rnk = F.row_number().over(

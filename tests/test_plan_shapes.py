@@ -418,9 +418,10 @@ def test_ann_adaptive_serving_plan_shapes(spark, sf_dir):
     - lsh_bucket_topk_adaptive: a scan + filter + TakeOrdered — ZERO
       hash exchanges (the 1-row count broadcasts; the signature mask is
       a projection);
-    - ivf_topk_adaptive: NO Window operator (the fixed twin row_numbers
-      all N×n_centroids scored rows) and at most one hash exchange (the
-      partial-aggregable struct-max groupBy on the id)."""
+    - ivf_topk_adaptive: an eager count() plus a centroid collect
+      during construction, then ONE assign_nearest map — NO Window
+      operator (the fixed twin row_numbers all N×n_centroids scored
+      rows) and at most one hash exchange."""
     import re
 
     p = plan_str(spark, sf_dir, "similarity_lsh_bucketed_scaled")

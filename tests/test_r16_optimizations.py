@@ -214,7 +214,7 @@ def test_prefix_filter_shared_artifact_matches_raw_path(spark, sf_dir):
     ref = D.verify_candidates_jaccard(
         d, cands_ref, "doc_id", "text", threshold=0.7, shingle_n=2
     )
-    tokd = D.tokenized_corpus_artifact(d, "doc_id", "text", portable_hashes=False)
+    tokd = D.tokenized_corpus_artifact(d, "doc_id", "text")
     rows = materialize_once(
         D.shingle_hash_rows_from_tokens(tokd, "doc_id", "__toks", 2)
     )

@@ -113,7 +113,7 @@ def test_r17_single_scan_steady_state(spark, sf_dir):
         "text_vocab_coverage": 0,  # vocab + OOV legs off the artifact
         "sampling_soft_dedup_weights": 0,  # chunk stream materialized
         "dedup_cross_source_matrix": 0,  # digest-source set materialized
-        "dedup_embedding_lsh_scaled": 0,  # with_norm materialized
+        "dedup_embedding_lsh_scaled": 0,  # (vid, vec) frame materialized
         "dedup_semantic_cluster": 0,  # assignment frame materialized
         "decontaminate_incremental_delta": 1,  # bench side; delta materialized
     }
@@ -212,15 +212,13 @@ def test_pack_efficiency_single_pass_matches_union_form(spark, sf_dir):
 
 
 def test_minhash_verified_pairs_rejects_hashless_artifact(spark, sf_dir):
-    """r16 ADVICE: injecting a portable_hashes=False artifact must fail
-    fast with a pointed message, not an unresolved-column
+    """r16 ADVICE: injecting an artifact without the ``__th60`` hashes
+    must fail fast with a pointed message, not an unresolved-column
     AnalysisException deep inside the signature pipeline."""
     from gomaxscale_spark.operators import dedup as D
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    tokd = D.tokenized_corpus_artifact(
-        d, "doc_id", "text", portable_hashes=False
-    )
+    tokd = D.tokenized_corpus_artifact(d, "doc_id", "text").drop("__th60")
     with pytest.raises(ValueError, match="__th60"):
         D.minhash_verified_pairs(
             d, "doc_id", "text", threshold=0.8, tokd=tokd

@@ -1,12 +1,14 @@
-"""The Arrow-batched numpy cosine kernels (operators/vector_kernel.py)
-vs the interpreted HOF fold: result parity on the real tables, the
-input-contract guards, and the serving-read safety the kernels ride
-with (committed-epoch filtering in the embedding lake's topk/read_kept,
+"""The Arrow-batched numpy cosine kernels (operators/vector_kernel.py):
+score parity with the interpreted HOF fold on the real tables, the
+zero-norm contract against the DuckDB replay, the input-contract
+guards, and the serving-read safety the kernels ride with
+(committed-epoch filtering in the embedding lake's topk/read_kept,
 first-time swap_publish).
 
 Parity here is EXACT collected-row equality after the operators' own
-6dp rounding — the same bar the DuckDB oracle gate applies — measured
-before any catalog entry switched kernels (VERDICT r8 item 1).
+6dp rounding — the same bar the DuckDB oracle gate applies. The
+operators built on the kernels have no HOF twin; the oracle replay
+checks their outputs at both scales.
 """
 
 from __future__ import annotations
@@ -53,37 +55,6 @@ def test_cosine_vs_query_matches_hof(spark, sf_dir):
         F.round(VK.cosine_vs_query(q)(F.col("embedding")), 6).alias("np"),
     ).collect()
     assert all(r.hof == r.np for r in got)
-
-
-def test_ivf_topk_adaptive_kernel_parity(spark, sf_dir):
-    """The swapped assignment (broadcast-join fan-out + struct-max →
-    one assign_nearest map) returns the identical top-k."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = _query_vec(emb)
-    hof = S.ivf_topk_adaptive(emb, q, k=10, n_probe=4, kernel="hof").collect()
-    np_ = S.ivf_topk_adaptive(emb, q, k=10, n_probe=4, kernel="numpy").collect()
-    assert [tuple(r) for r in hof] == [tuple(r) for r in np_]
-
-
-def test_kmeans_centroid_vectors_kernel_parity(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    hof = S.kmeans_centroid_vectors(emb, n_centroids=16, n_iters=1).collect()
-    np_ = S.kmeans_centroid_vectors(
-        emb, n_centroids=16, n_iters=1, kernel="numpy"
-    ).collect()
-    assert sorted((r.centroid_id, tuple(r.centroid_vec)) for r in hof) == sorted(
-        (r.centroid_id, tuple(r.centroid_vec)) for r in np_
-    )
-
-
-def test_lsh_near_duplicates_adaptive_kernel_parity(spark, sf_dir):
-    """Same candidate set by construction (bucketing is kernel-free);
-    the verify threshold keeps the same pairs at 6dp."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    hof = S.lsh_near_duplicates_adaptive(emb, 0.3, 64).collect()
-    np_ = S.lsh_near_duplicates_adaptive(emb, 0.3, 64, kernel="numpy").collect()
-    assert sorted(map(tuple, hof)) == sorted(map(tuple, np_))
-    assert hof, "fixture must contain near-dup pairs"
 
 
 def test_assign_nearest_input_contract():
@@ -141,14 +112,6 @@ def test_chunked_argmax_nan_first_occurrence_across_blocks(monkeypatch):
     assert (got == 6).all()
 
 
-def test_unknown_kernel_rejected(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="unknown kernel"):
-        S.ivf_topk_adaptive(emb, [0.0] * 64, k=5, kernel="blas")
-    with pytest.raises(ValueError, match="unknown kernel"):
-        S.kmeans_centroid_vectors(emb, kernel="blas")
-
-
 def test_wide_sigs_column_contract(spark, sf_dir):
     """ADVICE r8: a wide_sigs frame missing the s0..s{n_bands-1}
     columns must fail loudly, not silently mis-bucket."""
@@ -156,6 +119,46 @@ def test_wide_sigs_column_contract(spark, sf_dir):
     bad = emb.select("vec_id", F.lit(0).alias("s0"))  # missing s1..s3
     with pytest.raises(ValueError, match="wide_sigs is missing"):
         S.lsh_near_duplicates_adaptive(emb, 0.3, 64, wide_sigs=bad)
+
+
+def test_lsh_near_duplicates_adaptive_zero_norm_matches_oracle(spark):
+    """A zero-norm vector scores 0/0 against anything. The verify
+    drops such pairs (the kernel's NaN reaches Spark as NULL) exactly
+    as the DuckDB replay does (0/0 is NULL there), instead of raising
+    ANSI DIVIDE_BY_ZERO; the keep-representatives composition then
+    keeps both zero vectors."""
+    import duckdb
+
+    from gomaxscale_spark.operators import dedup as D
+    from gomaxscale_spark.plans import all_queries
+    from gomaxscale_spark.plans.llm import _embedding_lsh_adaptive_oracle
+
+    unit = [1.0] + [0.0] * 63
+    rows = [
+        (0, [0.0] * 64, 0),
+        (1, [0.0] * 64, 0),
+        (2, unit, 1),
+        (3, unit, 1),
+        (4, [0.0, 1.0] + [0.0] * 62, 2),  # orthogonal to the unit pair
+    ]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[], label INTEGER)")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+
+    pairs = S.lsh_near_duplicates_adaptive(emb, 0.3, 64)
+    got = sorted(map(tuple, pairs.collect()))
+    assert got == [(2, 3, 1.0)]
+    assert got == sorted(con.execute(_embedding_lsh_adaptive_oracle(0.3)).fetchall())
+
+    # dedup_embedding_keep_representatives' composition over the same rows
+    clusters = D.connected_components_star(pairs)
+    drop = clusters.filter(F.col("cluster_id") != F.col("id")).select("id")
+    kept = emb.join(F.broadcast(drop), F.col("vec_id") == F.col("id"), "left_anti")
+    kept_ids = sorted(r.vec_id for r in kept.collect())
+    assert kept_ids == [0, 1, 2, 4]
+    oracle = all_queries()["dedup_embedding_keep_representatives"].oracle
+    assert kept_ids == sorted(r[0] for r in con.execute(oracle).fetchall())
 
 
 def test_embedding_sink_serving_reads_skip_partial_epochs(spark, sf_dir, tmp_path):
@@ -320,22 +323,6 @@ def test_topk_batch_rejects_duplicate_query_ids(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate query ids"):
         sink.topk_batch(queries, k=3)
-
-
-def test_cluster_balanced_kernel_parity(spark, sf_dir):
-    """sampling_cluster_balanced's assign_nearest(with_score=True) path
-    returns the identical quota selection as the HOF broadcast-join
-    twin — membership AND rounded scores (the rank orders on the
-    6dp-rounded score precisely so a last-ulp kernel divergence cannot
-    flip it)."""
-    from gomaxscale_spark.plans.llm import _cluster_balanced
-
-    hof = _cluster_balanced(spark, sf_dir, kernel="hof").collect()
-    np_ = _cluster_balanced(spark, sf_dir, kernel="numpy").collect()
-    assert sorted(map(tuple, hof)) == sorted(map(tuple, np_))
-    assert hof, "fixture must select rows"
-    with pytest.raises(ValueError, match="unknown kernel"):
-        _cluster_balanced(spark, sf_dir, kernel="blas")
 
 
 def test_sign_band_signatures_kernel_parity(spark, sf_dir):

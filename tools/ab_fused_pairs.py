@@ -83,9 +83,7 @@ def main() -> None:
     def new_prefix():
         from gomaxscale_spark.operators.materialize import materialize_once
 
-        tokd = D.tokenized_corpus_artifact(
-            d, "doc_id", "text", portable_hashes=False
-        )
+        tokd = D.tokenized_corpus_artifact(d, "doc_id", "text")
         rows = materialize_once(
             D.shingle_hash_rows_from_tokens(tokd, "doc_id", "__toks", 2)
         )

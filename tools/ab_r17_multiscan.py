@@ -2,12 +2,13 @@
 """Interleaved same-session A/B of the r17 multi-scan rewrites: OLD form
 (inline copy of the pre-change expression shape) vs NEW (repo
 operator), alternating per round so host drift hits both. Prints
-per-cell medians. Usage: python /tmp/ab_r17.py <sf_dir> [rounds]"""
+per-cell medians. Usage: python tools/ab_r17_multiscan.py <sf_dir> [rounds]"""
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -28,13 +29,9 @@ from gomaxscale_spark.operators.text import (
 from gomaxscale_spark.operators.dedup import tokenize
 from gomaxscale_spark.operators.bucketing import parallelize_narrow_input
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-ROUNDS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-
-spark = get_session("ab_r17", cpus=32)
-docs = spark.read.parquet(f"{SF}/documents.parquet")
-emb = spark.read.parquet(f"{SF}/embeddings.parquet")
 TERMS = ("spark", "window", "hash")
+# set by main(): the session and the two tables every old/new form reads
+spark = docs = emb = None
 
 
 def noop(df):
@@ -225,18 +222,30 @@ PAIRS = [
     ("cross_source", old_cross_source, new_cross_source),
 ]
 
-# warm
-noop(docs.select("doc_id").limit(10))
+def main() -> None:
+    global spark, docs, emb
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    spark = get_session("ab_r17", cpus=32)
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
 
-results = {name: {"old": [], "new": []} for name, _, _ in PAIRS}
-for rnd in range(ROUNDS):
-    for name, old_fn, new_fn in PAIRS:
-        t0 = time.perf_counter(); noop(old_fn()); results[name]["old"].append(time.perf_counter() - t0)
-        t0 = time.perf_counter(); noop(new_fn()); results[name]["new"].append(time.perf_counter() - t0)
+    # warm
+    noop(docs.select("doc_id").limit(10))
 
-print(f"\n== {SF} rounds={ROUNDS} ==")
-for name in results:
-    o = results[name]["old"]; n = results[name]["new"]
-    print(f"{name:18s} old med {statistics.median(o):6.2f} (min {min(o):5.2f})  "
-          f"new med {statistics.median(n):6.2f} (min {min(n):5.2f})")
-spark.stop()
+    results = {name: {"old": [], "new": []} for name, _, _ in PAIRS}
+    for rnd in range(rounds):
+        for name, old_fn, new_fn in PAIRS:
+            t0 = time.perf_counter(); noop(old_fn()); results[name]["old"].append(time.perf_counter() - t0)
+            t0 = time.perf_counter(); noop(new_fn()); results[name]["new"].append(time.perf_counter() - t0)
+
+    print(f"\n== {sf} rounds={rounds} ==")
+    for name in results:
+        o = results[name]["old"]; n = results[name]["new"]
+        print(f"{name:18s} old med {statistics.median(o):6.2f} (min {min(o):5.2f})  "
+              f"new med {statistics.median(n):6.2f} (min {min(n):5.2f})")
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -10,8 +10,8 @@ and never builds shingles; git shows commit 552b34c touched only
 `word_shingles` monkeypatched back to the pre-r10 (unbound) form —
 normalizes plan/exprId counters, and asserts the two plan strings are
 BYTE-IDENTICAL. Identical plans ⇒ the rewrite cannot explain the
-delta ⇒ best-of-5 noise adjudication (tools/adjudicate_r11.py) is the
-right instrument.
+delta ⇒ best-of-5 noise adjudication
+(`git show b8116fd:tools/adjudicate_r11.py`) is the right instrument.
 """
 
 from __future__ import annotations
