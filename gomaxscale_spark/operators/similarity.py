@@ -57,7 +57,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """0/0 (a zero-norm vector) is NULL, as in the DuckDB oracle, not
+    an ANSI DIVIDE_BY_ZERO."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def cosine_topk(
@@ -137,7 +139,9 @@ def pairwise_near_duplicates(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "__raw",
-            dot(F.col("vec_a"), F.col("vec_b")) / (F.col("norm_a") * F.col("norm_b")),
+            F.try_divide(
+                dot(F.col("vec_a"), F.col("vec_b")), F.col("norm_a") * F.col("norm_b")
+            ),
         )
         .filter(F.col("__raw") >= threshold)
         .select("id_a", "id_b", F.round("__raw", 6).alias("score"))
@@ -268,7 +272,9 @@ def lsh_near_duplicates(
         .join(vb, "id_b")
         .withColumn(
             "__raw",
-            dot(F.col("vec_a"), F.col("vec_b")) / (F.col("norm_a") * F.col("norm_b")),
+            F.try_divide(
+                dot(F.col("vec_a"), F.col("vec_b")), F.col("norm_a") * F.col("norm_b")
+            ),
         )
         .filter(F.col("__raw") >= threshold)
         .select("id_a", "id_b", F.round("__raw", 6).alias("score"))
@@ -946,8 +952,9 @@ def semantic_dedup(
             # SQL fold must not flip pair membership — the same rounded-
             # score discipline as benchmark_decontaminate_embeddings.
             F.round(
-                dot(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("norm_a") * F.col("norm_b")),
+                F.try_divide(
+                    dot(F.col("vec_a"), F.col("vec_b")), F.col("norm_a") * F.col("norm_b")
+                ),
                 6,
             ),
         )

@@ -58,7 +58,7 @@ def cosine_pairs(a: Column, b: Column) -> Column:
 
     Exactly the HOF formula per row: Σaᵢbᵢ / (‖a‖·‖b‖), float64
     accumulation; a zero-norm side yields NaN, which Arrow hands to
-    Spark as NULL (the HOF fold raises DIVIDE_BY_ZERO under ANSI).
+    Spark as NULL (the HOF fold gives NULL through ``try_divide``).
     """
 
     @pandas_udf("double")

@@ -2547,7 +2547,7 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # d feeds BOTH the contamination branch and the final join —
     # materialize it once (same discipline as verify_candidates_jaccard)
     # or the quality-score scan + dedup shuffle execute twice. r6 A/B
-    # (tools/ab_capstone.py, sf0.1, 5 interleaved runs/mode): the
+    # (git show 094fce9:tools/ab_capstone.py, sf0.1, 5 interleaved runs/mode): the
     # executed no-materialization plan has NO ReusedExchange over the
     # shared subtree, and measured localCheckpoint 2.38 s / persist_disk
     # 2.58 s / none 2.80 s (min) — materializing saves ~15% of capstone
@@ -3046,7 +3046,7 @@ def similarity_pq16_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "orthonormal literal (opq_rotation_lcg — the PQ+RR baseline "
     "shape); train_opq (alternating k-means ↔ orthogonal Procrustes) "
     "is the production path, pytested for reconstruction-error and "
-    "recall lift vs plain trained PQ (tools/ab_opq.py measures the "
+    "recall lift vs plain trained PQ (git show 094fce9:tools/ab_opq.py measures the "
     "replica curves). Scale: the rotation is ingest-time (once per "
     "vector, fused into the narrow encode projection chain — no "
     "shuffle); probes read only (id, 8-byte code) exactly as PQ — "
@@ -4515,7 +4515,7 @@ def search_bm25_hashed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the corpus through four tokenize legs (df/meta/tf/lengths) —
     # binding the token array once pays split/lower/filter once instead
     # of four times: ×0.86 at x30, ×0.83 at x100, outputs identical
-    # (tools/ab_bm25_tokenized.py, SCALING.md r13).
+    # (git show 094fce9:tools/ab_bm25_tokenized.py, SCALING.md r13).
     d = t(spark, sf_dir, "documents")
     tokd = materialize_once(SE.tokenized_docs(d))
     ts, meta = SE.corpus_term_stats_tokenized(tokd)

@@ -161,6 +161,35 @@ def test_lsh_near_duplicates_adaptive_zero_norm_matches_oracle(spark):
     assert kept_ids == sorted(r[0] for r in con.execute(oracle).fetchall())
 
 
+def test_cosine_zero_norm_matches_oracle(spark):
+    """The interpreted fold's 0/0 is NULL, as in DuckDB, instead of an
+    ANSI DIVIDE_BY_ZERO: a unit and a zero vector through
+    ``cosine_topk`` (the query vector is vec_id 0, either one) and
+    through the blocked and LSH pair verifies."""
+    import duckdb
+
+    from gomaxscale_spark.plans import all_queries
+
+    queries = all_queries()
+    unit, zero = [1.0] + [0.0] * 63, [0.0] * 64
+    for rows in ([(0, unit, 0), (1, zero, 0)], [(0, zero, 0), (1, unit, 0)]):
+        emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
+        con = duckdb.connect()
+        con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[], label INTEGER)")
+        con.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+
+        def oracle(name):
+            return con.execute(queries[name].oracle).fetchall()
+
+        got = [tuple(r) for r in S.cosine_topk(emb, rows[0][1], k=10).collect()]
+        assert got == oracle("similarity_cosine_topk")
+        assert got[1] == (1, None)
+        assert S.pairwise_near_duplicates(emb, 0.3, block_col="label").collect() == []
+        assert oracle("dedup_embedding_cosine") == []
+        assert S.lsh_near_duplicates(emb, 0.3, dim=64).collect() == []
+        assert oracle("dedup_embedding_lsh") == []
+
+
 def test_embedding_sink_serving_reads_skip_partial_epochs(spark, sf_dir, tmp_path):
     """VERDICT r8 item 4: a fault-injected partial epoch is invisible
     to topk()/read_kept before the retry; after the retry it appears."""

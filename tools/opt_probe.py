@@ -39,6 +39,56 @@ from gomaxscale_spark.plans import all_queries
 from gomaxscale_spark.session import codegen_compilations, get_session
 
 
+def phase_split(spark, fn, sf_dir: str, group: str, runs: int = 0) -> dict:
+    """One query's phases: construct ``fn(spark, sf_dir)``, its first
+    noop write, then ``runs`` fresh construct + write repeats. Each
+    phase runs in its own job group under the ``group`` prefix, so
+    ``job_ids`` (sorted, construct and first write) are this query's
+    jobs alone. Cached frames are dropped at the end."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    compiles = [codegen_compilations(spark)]
+    sc.setJobGroup(f"{group}:construct", group)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    construct_s = time.perf_counter() - t0
+    compiles.append(codegen_compilations(spark))
+    sc.setJobGroup(f"{group}:first", group)
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    first_s = time.perf_counter() - t0
+    compiles.append(codegen_compilations(spark))
+    sc.setJobGroup(f"{group}:runs", group)
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        # fresh construction per run: catalog fns may materialize
+        # (localCheckpoint) during fn() or first use; re-building is
+        # exactly what the bench times
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        walls.append(time.perf_counter() - t0)
+    compiles.append(codegen_compilations(spark))
+    spark.catalog.clearCache()
+    construct_ids = tracker.getJobIdsForGroup(f"{group}:construct")
+    first_ids = tracker.getJobIdsForGroup(f"{group}:first")
+    row = {
+        "construct_s": round(construct_s, 3),
+        "construct_jobs": len(construct_ids),
+        "construct_compiles": compiles[1] - compiles[0],
+        "first_s": round(first_s, 3),
+        "jobs": len(first_ids),
+        "first_compiles": compiles[2] - compiles[1],
+    }
+    if runs:
+        row.update({
+            "best_s": round(min(walls), 3),
+            "median_s": round(statistics.median(walls), 3),
+            "runs_compiles": compiles[3] - compiles[2],
+        })
+    row["job_ids"] = sorted(construct_ids) + sorted(first_ids)
+    return row
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.1"
@@ -63,58 +113,16 @@ def main() -> None:
         names = list(bench.HEADLINE) + list(bench.EXTRA)
 
     spark = get_session("opt_probe")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     # warm JVM/codegen once
     registry["scan_filter_project"].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 
-    def jobs_in(group: str) -> int:
-        return len(tracker.getJobIdsForGroup(group))
-
     for name in names:
-        q = registry[name]
-        compiles = [codegen_compilations(spark)]
-        sc.setJobGroup(f"opt_probe:{name}:construct", name)
-        t0 = time.perf_counter()
-        df = q.fn(spark, sf_dir)
-        construct_s = time.perf_counter() - t0
-        compiles.append(codegen_compilations(spark))
-        sc.setJobGroup(f"opt_probe:{name}:first", name)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        first_s = time.perf_counter() - t0
-        compiles.append(codegen_compilations(spark))
-        sc.setJobGroup(f"opt_probe:{name}:runs", name)
-        walls = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            # fresh construction per run: catalog fns may materialize
-            # (localCheckpoint) during fn() or first use; re-building is
-            # exactly what the bench times
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(time.perf_counter() - t0)
-        compiles.append(codegen_compilations(spark))
-        spark.catalog.clearCache()
-        print(
-            json.dumps(
-                {
-                    "name": name,
-                    "construct_s": round(construct_s, 3),
-                    "construct_jobs": jobs_in(f"opt_probe:{name}:construct"),
-                    "construct_compiles": compiles[1] - compiles[0],
-                    "first_s": round(first_s, 3),
-                    "jobs": jobs_in(f"opt_probe:{name}:first"),
-                    "first_compiles": compiles[2] - compiles[1],
-                    "best_s": round(min(walls), 3),
-                    "median_s": round(statistics.median(walls), 3),
-                    "runs_compiles": compiles[3] - compiles[2],
-                }
-            ),
-            flush=True,
-        )
+        row = phase_split(spark, registry[name].fn, sf_dir, f"opt_probe:{name}", runs)
+        del row["job_ids"]
+        print(json.dumps({"name": name, **row}), flush=True)
     spark.stop()
 
 
