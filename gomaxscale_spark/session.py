@@ -32,6 +32,14 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # No per-Column call-site capture: with it on, every F.col, Column
+    # operator and transform call makes ~5 extra Py4J round trips
+    # (getActiveSession, a conf read, PySparkCurrentOrigin.set/clear).
+    # Errors keep their error class and DataFrame fragment; only the
+    # Python file:line goes. PySpark caches the flag at the process's
+    # first Column call, so get_session's builder sets it before any
+    # Column exists.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -65,7 +73,10 @@ def configure(spark: SparkSession) -> SparkSession:
     Static confs are fixed when the JVM's session state is built, so a
     session handed in keeps its builder's values: in particular Spark's
     default generated-code cache, which only :func:`get_session` sizes to
-    :data:`CODEGEN_CACHE_ENTRIES`."""
+    :data:`CODEGEN_CACHE_ENTRIES`. Likewise PySpark caches
+    ``spark.python.sql.dataFrameDebugging.enabled`` at the process's
+    first Column call: a session handed in after Columns were built
+    keeps per-Column call-site capture on, whatever this sets."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

@@ -22,6 +22,12 @@ inside one run), `gtid` is the protocol-level resume point sent as
 ``REQUEST-DATA db.table [gtid]`` on restart (the reference's WithGTID,
 gomaxscale_options.go:53-57).
 
+Micro-batches: a trigger waits (up to ``read_timeout``) only for its
+first row, then takes what is already buffered and closes when the
+socket would block; ``max_events_per_batch`` caps a batch, so only a
+backlog fills it. A row is therefore committed about one sink epoch
+after it arrives, not after the cap fills.
+
 Scale: one CDC subscription is inherently a single TCP socket — the
 reader is a SimpleDataSourceStreamReader (driver-side prefetch), which
 is exactly the reference's single consumer goroutine. Parallelism comes
@@ -128,11 +134,17 @@ class MaxScaleCDCStreamReader(SimpleDataSourceStreamReader):
         ]
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        """One micro-batch: drain what the socket has, bounded by
-        max_events_per_batch (maxOffsetsPerTrigger-style rate limiting).
-        A quiet period (read timeout) ends the batch — possibly empty;
-        on EOF the next read() reconnects with REQUEST-DATA <last gtid>
-        — the reference's restart semantics (gomaxscale.go:46-53).
+        """One micro-batch: all the data available now (the contract of
+        ``SimpleDataSourceStreamReader.read``). Only the first row is
+        waited for, up to ``read_timeout``; an idle socket yields an
+        empty batch. After it the batch takes the leftovers of a capped
+        batch and whatever the socket already holds, and closes as soon
+        as a read would block. ``max_events_per_batch`` caps a batch and
+        is not a fill target (Kafka's ``maxOffsetsPerTrigger``): a
+        trigger takes what arrived during the previous one, and only a
+        backlog fills the cap. On EOF the next read() reconnects with
+        REQUEST-DATA <last gtid> — the reference's restart semantics
+        (gomaxscale.go:46-53).
 
         Exactly-once across reconnects: MaxScale's GTID resume is
         *inclusive* (events from the requested GTID onward are
@@ -168,10 +180,12 @@ class MaxScaleCDCStreamReader(SimpleDataSourceStreamReader):
         client = self._ensure_client(gtid)
         proto_errors = 0
         while len(rows) < self.max_events_per_batch:
+            if rows and not client.ready():
+                break  # all that has arrived is in: close the micro-batch
             try:
                 events = client.scan()
             except (_socket.timeout, TimeoutError):
-                break  # quiet socket → close out this micro-batch
+                break  # no first row within read_timeout (or a stalled frame)
             except EOFError:
                 self._eof = True
                 break

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import select
 import socket
 import time as time_mod
 import uuid as uuid_mod
@@ -200,6 +201,15 @@ class CDCClient:
             loops += 1
             if loops > MAX_EMPTY_LOOPS:
                 raise CDCProtocolError("too many network iterations to find a json object")
+
+    def ready(self) -> bool:
+        """Whether the next :meth:`scan` can start without waiting: a
+        zero-timeout readiness check of the socket (bytes buffered, or
+        the server's close pending). A frame the last read left half
+        received does not count — its rest is still on the wire."""
+        assert self._sock is not None, "connect() first"
+        readable, _, _ = select.select([self._sock], [], [], 0)
+        return bool(readable)
 
     def events(self, max_idle_polls: int | None = None) -> Iterator[CDCEventFrame]:
         """Generator over the live stream; terminates on EOF, treats

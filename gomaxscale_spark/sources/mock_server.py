@@ -32,10 +32,13 @@ class MockMaxScaleServer:
     fail_registration: bool = False
     fail_events: bool = False
     #: wire payloads to send once subscribed. Each item is raw bytes
-    #: written as-is (callers control chunking by splitting items) or a
-    #: dict (JSON-encoded + newline, like the reference's json.Encoder).
+    #: written as-is or a dict (JSON-encoded + newline, like the
+    #: reference's json.Encoder).
     script: list[Any] = field(default_factory=list)
-    #: inter-write delay (seconds) to let client polls interleave
+    #: delay (seconds) after each item's write, to let client polls
+    #: interleave; callers control chunking by splitting items. Without
+    #: it the script is one burst and goes out in one write, so a
+    #: reader finds all of it on the socket at once.
     write_delay: float = 0.0
     keep_open: float = 0.25  # linger after the script so the client can drain
     port: int = 0  # 0 = random; fix it to restart a server on the same address
@@ -130,6 +133,7 @@ class MockMaxScaleServer:
                         resume_from = (d, s, q)
                     except ValueError:
                         pass
+            payloads = []
             for item in self.script:
                 if (
                     resume_from is not None
@@ -143,12 +147,14 @@ class MockMaxScaleServer:
                     < resume_from
                 ):
                     continue  # before the requested GTID (resume is inclusive)
-                payload = (
+                payloads.append(
                     json.dumps(item).encode() + b"\n" if isinstance(item, dict) else item
                 )
+            if not self.write_delay:
+                payloads = [b"".join(payloads)]
+            for payload in payloads:
                 conn.sendall(payload)
-                if self.write_delay:
-                    time.sleep(self.write_delay)
+                time.sleep(self.write_delay)
             time.sleep(self.keep_open)
         except (BrokenPipeError, ConnectionResetError, OSError):
             pass

@@ -186,3 +186,13 @@ def test_warm_mix_reuses_generated_classes(spark, sf_dir):
     first = one_pass()
     second = one_pass()
     assert second <= 10, (first, second)
+
+
+def test_session_skips_column_call_site_capture(spark):
+    """``get_session`` turns off PySpark's per-Column call-site capture
+    (about five Py4J round trips per Column call) before any Column
+    exists, so PySpark's cached flag reads it as off."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False

@@ -217,6 +217,83 @@ def test_rate_limit_max_events_per_batch(registered):
     assert [r[2] for r in rows1 + rows2] == list(range(6))  # sequence column
 
 
+def _wire(*events) -> bytes:
+    """Events as one wire write, so they reach the socket together."""
+    return b"".join(json.dumps(e).encode() + b"\n" for e in events)
+
+
+def _reader(addr, **opts):
+    from gomaxscale_spark.sources.cdc_source import MaxScaleCDCStreamReader
+
+    return MaxScaleCDCStreamReader(dict(read_options(addr), **opts))
+
+
+def test_batch_closes_on_rows_received():
+    """A burst, then a pause: read() returns the burst as soon as the
+    socket would block, well inside read_timeout and without waiting for
+    the 10 000-row cap; the next burst is the next batch."""
+    script = [_wire(*(dml(i, id=i) for i in range(5))), _wire(dml(5, id=5))]
+    with MockMaxScaleServer(script=script, write_delay=0.5, keep_open=0.5) as addr:
+        reader = _reader(addr, read_timeout="2.0")
+        t0 = time.monotonic()
+        rows1, end1 = reader.read(reader.initialOffset())
+        elapsed = time.monotonic() - t0
+        rows2, end2 = reader.read(end1)
+        reader.stop()
+    assert [r[2] for r in rows1] == list(range(5))
+    assert elapsed < 0.4, elapsed
+    assert [r[2] for r in rows2] == [5]
+    assert (end1["pos"], end2["pos"], end2["gtid"]) == (5, 6, "0-1-5")
+
+
+def test_batch_over_cap_yields_cap_then_rest():
+    """A burst larger than the cap: exactly cap rows, then the rest from
+    the leftovers, in order, without another wait."""
+    script = [dml(i, id=i) for i in range(7)]
+    with MockMaxScaleServer(script=script, keep_open=1.0) as addr:
+        reader = _reader(addr, max_events_per_batch="3", read_timeout="2.0")
+        t0 = time.monotonic()
+        offset, batches = reader.initialOffset(), []
+        for _ in range(3):
+            rows, offset = reader.read(offset)
+            batches.append([r[2] for r in rows])
+        elapsed = time.monotonic() - t0
+        reader.stop()
+    assert batches == [[0, 1, 2], [3, 4, 5], [6]]
+    assert offset["pos"] == 7
+    assert elapsed < 1.0, elapsed
+
+
+def test_idle_socket_yields_empty_batch_after_read_timeout():
+    with MockMaxScaleServer(script=[], keep_open=1.0) as addr:
+        reader = _reader(addr, read_timeout="0.3")
+        start = reader.initialOffset()
+        t0 = time.monotonic()
+        rows, end = reader.read(start)
+        elapsed = time.monotonic() - t0
+        reader.stop()
+    assert list(rows) == []
+    assert end == start
+    assert elapsed >= 0.3, elapsed
+
+
+def test_frame_split_across_batch_close_arrives_whole():
+    """The batch closes while a frame is half received; its bytes stay
+    in the scanner and the frame arrives whole in the next batch."""
+    tail = _wire(dml(2, id=2))
+    script = [_wire(dml(0, id=0), dml(1, id=1)) + tail[:25], tail[25:]]
+    with MockMaxScaleServer(script=script, write_delay=0.3, keep_open=0.5) as addr:
+        reader = _reader(addr, read_timeout="2.0")
+        rows1, end1 = reader.read(reader.initialOffset())
+        rows2, end2 = reader.read(end1)
+        reader.stop()
+    assert [r[2] for r in rows1] == [0, 1]
+    rows2 = list(rows2)
+    assert [r[2] for r in rows2] == [2]
+    assert json.loads(rows2[0][7]) == dml(2, id=2)
+    assert end2["pos"] == 3
+
+
 def test_two_table_sources_compose(registered):
     """One consumer per db.table (the reference's model,
     gomaxscale.go:96-100): two registered sources read different tables
